@@ -22,15 +22,19 @@ Query v2 (block-max WAND-style): per (query, partition of segments), sum the
 per-term block bounds; if the bound cannot beat the current k-th best score,
 skip decoding the segment entirely. Exact scores for surviving segments are
 computed vectorized (numpy) and fed into a bounded per-partition heap; the
-global merge is ≤ partitions×k rows (the reference's chunked-scan +
-heappushpop shape, sentence_transformers.py:334-364, planned distributedly).
-Skipping uses safe bounds only → rank/score-identical to the exact v1 join
-scorer (verified in tests).
+≤ partitions×k heap rows per query are merged on the DRIVER (the reference's
+chunked-scan + heappushpop shape, sentence_transformers.py:334-364, with the
+scan distributed). One request is 4 Spark jobs — a bounded collect of the
+tokenized queries, one pushed-down idf read, and the segment-shuffled
+scoring pass (shuffle + collect) — or 2 when no query term is in the store;
+the result is a local relation. Skipping uses safe bounds only →
+rank/score-identical to the exact v1 join scorer (verified in tests).
 """
 
 from __future__ import annotations
 
 import heapq
+from collections import Counter
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -48,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from fusion_spark.indexing import BM25Index
+from fusion_spark.tokenize import tokenize
 
 BLOCK_SCHEMA = StructType(
     [
@@ -100,31 +105,47 @@ def varint_encode(values: np.ndarray) -> bytes:
     return _varint_encode_stream(values)[0]
 
 
+class VarintDecodeError(ValueError):
+    """A varint blob that does not decode to its block's value count —
+    truncated, over-long or otherwise corrupt."""
+
+
 def varint_decode(blob: bytes, count: int) -> np.ndarray:
     """Decode `count` LEB128 varints — same byte format, decode-order
     kernel (r11, the hot-term decode lever of the r10 verdict #3):
 
       * all-single-byte blobs (the dominant hot-term shape: dense doc
-        deltas, small tf, sub-128 dl) short-circuit to one masked copy —
-        measured 1.7 G vals/s vs 36 M for the old kernel;
+        deltas, small tf, sub-128 dl) short-circuit to one copy after a
+        C-level all-bytes-below-0x80 check (`bytes.isascii`) — measured
+        1.7 G vals/s vs 36 M for the old kernel;
       * otherwise a shrinking-active-set plane loop ORs each continuation
         byte into only the values that HAVE one — every step is a plain
         fancy-index gather/scatter with unique indices, replacing the old
         `np.add.at` scatter-add (unbuffered, and it carried the whole
         byte stream through every plane). Measured 2.2-3.7× on mixed
-        1-9-byte distributions, identical outputs (property-tested)."""
-    if count == 0:
-        return np.zeros(0, dtype=np.uint64)
+        1-9-byte distributions, identical outputs (property-tested).
+
+    A blob holding a different number of values than `count` (or ending
+    inside a value) raises VarintDecodeError instead of returning a short,
+    long or garbled array."""
     raw = np.frombuffer(blob, dtype=np.uint8)
+    if raw.size == count and blob.isascii():
+        return raw.astype(np.uint64)  # no continuation bytes anywhere
+    if raw.size == 0 or raw[-1] & 0x80:
+        raise VarintDecodeError(
+            f"varint blob of {raw.size} bytes is truncated: expected {count} values"
+        )
     payload = raw & np.uint8(0x7F)
-    if raw.size == count:  # no continuation bytes anywhere
-        return payload.astype(np.uint64)
     cont = (raw & 0x80) > 0
     # value start positions: a byte starts a value if previous byte had no cont bit
     starts = np.empty(raw.size, dtype=bool)
     starts[0] = True
     starts[1:] = ~cont[:-1]
     pos = np.flatnonzero(starts)  # first byte of each value
+    if pos.size != count:
+        raise VarintDecodeError(
+            f"varint blob of {raw.size} bytes holds {pos.size} values, expected {count}"
+        )
     vals = payload[pos].astype(np.uint64)
     vi = None  # active value indices (implicit all, initially)
     shift = np.uint64(0)
@@ -837,7 +858,6 @@ def _estimate_pack_stats(
     IDENTICALLY to the exact model at 200k, 500k and 1.44M docs
     (BENCH.md r10 fused-build section)."""
     from fusion_spark.indexing import _postings_from_tokens
-    from fusion_spark.tokenize import tokenize
 
     f_eff = 1.0 if n_docs * sample_fraction < 4000 else float(sample_fraction)
     sampled = docs if f_eff >= 1.0 else docs.sample(fraction=f_eff, seed=seed)
@@ -918,7 +938,6 @@ def build_packed(
     import time as _time
 
     from fusion_spark.indexing import idf_expr, _postings_from_tokens
-    from fusion_spark.tokenize import tokenize
 
     t_mark = _time.perf_counter()
 
@@ -1216,100 +1235,140 @@ def wand_search(
     bounded heaps. Rank/score identical to scoring.search (sparse mode):
     deterministic sorted-term summation, tie-break (score DESC, doc_id ASC).
 
-    Memory contract: each chunk's query-term table ships to executors via
+    Job plan: 4 Spark jobs per request, 2 when no query term is in the store.
+      1. query terms — the tokenized query frame is collected once, bounded
+         by `limit(cap + 1)`; qtf is counted on the driver;
+      2. idf — one pushed-down `termstats.filter(term IN …)` collect;
+      3. score (2 jobs: segment shuffle + collect) — per qid chunk, one
+         `repartition("segment").mapInPandas` pass over the query terms'
+         blocks; its per-partition heaps are merged on the driver in
+         (score DESC, doc_id ASC) order.
+    The result is a local relation, so collecting it launches no job. Each
+    step is labelled with a job description (`wand_search: query terms`,
+    `: idf`, `: score`); the caller's description is restored on return.
+
+    Memory contract: a chunk's query-term table ships to executors via
     closure and every partition keeps a k-slot heap PER QUERY of that chunk,
     so per-pass EXECUTOR footprint is O(|chunk|·k) — batches larger than
-    `max_queries_per_chunk` are processed in qid chunks and unioned (each
-    chunk is one independent distributed pass over the query-term blocks).
-    The DRIVER, however, holds every chunk's collected (qid, term, qtf, idf)
-    rows alive simultaneously through the union branches' closures —
-    O(|queries|·terms) — and each chunk adds a branch to one unionByName
-    plan, so a direct mega-batch call would build a 1000-branch plan before
-    any task runs. Batches needing more than `max_chunks_per_plan` chunks
-    therefore raise: dense 10⁵+-query offline batches belong on
-    scoring.search / search_auto — one join plan beats hundreds of chunked
-    passes when most blocks must be decoded anyway. search_auto clamps its
-    routing bound to max_queries_per_chunk·max_chunks_per_plan (read from
-    this signature), so batches beyond this guard's capacity take the join
-    scorer instead of reaching the raise. Chunking is result-invariant:
-    queries never interact."""
-    from fusion_spark.scoring import query_terms
-
-    # persisted across BOTH collects (the qid census + the per-chunk row
-    # collects) so the tokenize UDF + termstats join run once, not twice on
-    # the common unchunked path; every read of qterms below is an eager
-    # driver collect, so the cache is released before returning
-    qterms = query_terms(queries, mode=mode).join(
-        packed.termstats.select("term", "idf"), "term"
-    ).persist()
+    `max_queries_per_chunk` run as consecutive qid chunks. The DRIVER holds
+    the batch's query terms, at most partitions·|chunk|·k candidate rows per
+    chunk (cut to |chunk|·k before the next chunk runs) and a result of at
+    most |queries|·k rows. To keep that bounded, a batch of more than
+    max_queries_per_chunk·max_chunks_per_plan query rows raises: dense
+    10⁵+-query offline batches belong on scoring.search / search_auto — one
+    join plan beats hundreds of chunked passes when most blocks must be
+    decoded anyway. search_auto clamps its routing bound to that product
+    (read from this signature), so batches beyond it take the join scorer
+    instead of reaching the raise. Chunking is result-invariant: queries
+    never interact."""
+    spark = queries.sparkSession
+    sc = spark.sparkContext
+    caller_description = sc.getLocalProperty("spark.job.description")
     try:
-        # BOUNDED census (r9 verdict #7): the distinct-qid collect is the
-        # first place a miswired 10^8-row "query" frame would land on the
-        # driver — limit() caps it at one row past the largest batch this
-        # path can legally serve, so the contract violation fails fast with
-        # a named error instead of an OOM mid-collect.
-        cap = max_queries_per_chunk * max_chunks_per_plan
-        qid_rows = qterms.select("qid").distinct().limit(cap + 1).collect()
-        if len(qid_rows) > cap:
-            raise ValueError(
-                f"wand_search: query batch exceeds {cap} distinct qids "
-                f"(max_queries_per_chunk={max_queries_per_chunk} × "
-                f"max_chunks_per_plan={max_chunks_per_plan}) — the WAND path "
-                "ships query-term tables through the driver by contract and "
-                "cannot serve dense offline batches; route them through "
-                "scoring.search / scoring.search_auto (one join plan), or "
-                "raise the limits deliberately"
-            )
-        qids_all = sorted(r["qid"] for r in qid_rows)
-        if len(qids_all) > max_queries_per_chunk:
-            from functools import reduce
-
-            chunks = [
-                qids_all[i : i + max_queries_per_chunk]
-                for i in range(0, len(qids_all), max_queries_per_chunk)
-            ]
-            if len(chunks) > max_chunks_per_plan:
-                raise ValueError(
-                    f"wand_search: {len(qids_all)} queries need {len(chunks)} "
-                    f"chunks (> max_chunks_per_plan={max_chunks_per_plan}); a "
-                    "plan this wide holds every chunk's query-term table on "
-                    "the driver and unions hundreds of passes — route dense "
-                    "offline batches through scoring.search or "
-                    "scoring.search_auto (one join plan), or raise "
-                    "max_queries_per_chunk/max_chunks_per_plan deliberately"
-                )
-            parts = [
-                _wand_chunk(
-                    packed, qterms.filter(F.col("qid").between(c[0], c[-1])), c, k, k1, b
-                )
-                for c in chunks
-            ]
-            return reduce(lambda a, d: a.unionByName(d), parts)
-        return _wand_chunk(packed, qterms, qids_all, k, k1, b)
+        sc.setJobDescription("wand_search: query terms")
+        qtf = _query_tf(queries, mode, max_queries_per_chunk, max_chunks_per_plan)
+        sc.setJobDescription("wand_search: idf")
+        terms = sorted({t for counts in qtf.values() for t in counts})
+        # an empty IN list folds to an empty relation: no job
+        idf = {
+            r["term"]: r["idf"]
+            for r in packed.termstats.filter(F.col("term").isin(terms))
+            .select("term", "idf")
+            .collect()
+        }
+        sc.setJobDescription("wand_search: score")
+        qids_all = sorted(q for q, counts in qtf.items() if any(t in idf for t in counts))
+        parts = []
+        for i in range(0, len(qids_all), max_queries_per_chunk):
+            chunk = qids_all[i : i + max_queries_per_chunk]
+            by_term: dict[str, list[tuple[int, int, float]]] = {}
+            for qid in chunk:
+                for term, n in qtf[qid].items():
+                    if term in idf:
+                        by_term.setdefault(term, []).append((qid, n, idf[term]))
+            cand = _wand_candidates(packed, by_term, chunk, k, k1, b).toPandas()
+            parts.append(_merge_heaps(cand, k))
+        return _ranked_frame(spark, parts)
     finally:
-        # every read above is an eager collect, so releasing here is safe —
-        # and a failed census/chunk collect must not leak the cached frame
-        qterms.unpersist()
+        sc.setJobDescription(caller_description)
 
 
-def _wand_chunk(
+# the result frame's columns, in the dtypes that give (long, long, double, int)
+_WAND_RESULT_DTYPES = {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
+
+
+def _query_tf(
+    queries: DataFrame, mode: str, max_queries_per_chunk: int, max_chunks_per_plan: int
+) -> dict[int, Counter]:
+    """qid → Counter(term → qtf) from ONE bounded collect of the tokenized
+    query frame. Tokenizing stays in the JVM (every `mode`); qtf is the
+    duplicate-token multiplicity of scoring.query_terms, and a qid given on
+    several rows pools its tokens as that groupBy does.
+
+    The collect is the first place a miswired 10^8-row "query" frame would
+    land on the driver — limit() caps it at one row past the largest batch
+    this path can serve, so the contract violation fails fast with a named
+    error instead of an OOM mid-collect (r9 verdict #7)."""
+    cap = max_queries_per_chunk * max_chunks_per_plan
+    toks = (
+        tokenize(queries.select("qid", "question"), text_col="question", mode=mode)
+        .select("qid", "tokens")
+        .limit(cap + 1)
+        .toPandas()
+    )
+    if len(toks) > cap:
+        raise ValueError(
+            f"wand_search: query batch exceeds {cap} rows, the most distinct qids "
+            f"one call serves (max_queries_per_chunk={max_queries_per_chunk} × "
+            f"max_chunks_per_plan={max_chunks_per_plan}) — the WAND path "
+            "ships query-term tables through the driver by contract and "
+            "cannot serve dense offline batches; route them through "
+            "scoring.search / scoring.search_auto (one join plan), or "
+            "raise the limits deliberately"
+        )
+    qtf: dict[int, Counter] = {}
+    for qid, tokens in zip(toks["qid"], toks["tokens"]):
+        if tokens is not None:
+            qtf.setdefault(int(qid), Counter()).update(t for t in tokens if t is not None)
+    return qtf
+
+
+def _merge_heaps(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Per-partition heaps → global top-k per qid, ranked in (score DESC,
+    doc_id ASC) order — each (qid, doc_id) arrives exactly once, because a
+    segment's rows are scored in one partition."""
+    order = np.lexsort((
+        cand["doc_id"].to_numpy(), -cand["score"].to_numpy(), cand["qid"].to_numpy()
+    ))
+    top = cand.iloc[order]
+    top = top.assign(rank=top.groupby("qid").cumcount() + 1)
+    return top[top["rank"] <= k]
+
+
+def _ranked_frame(spark: SparkSession, parts: list[pd.DataFrame]) -> DataFrame:
+    """Driver-side result as a local relation (Arrow), so collecting it
+    launches no job. An empty pandas frame would take a one-job RDD path,
+    so an empty result is a typed one-row frame cut by limit(0)."""
+    out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+    empty = out.empty
+    if empty:
+        out = pd.DataFrame({c: [0] for c in _WAND_RESULT_DTYPES})
+    ranked = spark.createDataFrame(out[list(_WAND_RESULT_DTYPES)].astype(_WAND_RESULT_DTYPES))
+    return ranked.limit(0) if empty else ranked
+
+
+def _wand_candidates(
     packed: PackedIndex,
-    qterms: DataFrame,
+    by_term: dict[str, list[tuple[int, int, float]]],
     qids_all: list[int],
     k: int,
     k1: float,
     b: float,
 ) -> DataFrame:
-    """One bounded WAND pass for ≤ max_queries_per_chunk qids: collects the
-    chunk's (qid, term, qtf, idf) rows to the driver and ships them by
-    closure — O(|chunk|·terms) driver memory, O(|chunk|·k) heap slots per
-    partition."""
-    # tiny: (qid, term, qtf, idf) — ship to every partition via closure
-    qt_rows = qterms.collect()
-    by_term: dict[str, list[tuple[int, int, float]]] = {}
-    for r in qt_rows:
-        by_term.setdefault(r["term"], []).append((r["qid"], r["qtf"], r["idf"]))
-
+    """One bounded WAND pass for ≤ max_queries_per_chunk qids: the chunk's
+    term → [(qid, qtf, idf)] table ships to every partition by closure
+    (O(|chunk|·k) heap slots per partition); each partition emits its heaps,
+    ≤ |chunk|·k (qid, doc_id, score) rows, unranked."""
     avgdl = packed.avgdl
     variant = packed.variant
     seg_size = packed.segment_size
@@ -1427,21 +1486,13 @@ def _wand_chunk(
     # The repartition("segment") is a CORRECTNESS requirement, not an
     # optimization: score_partition emits each (qid, doc_id)'s score exactly
     # once only if ALL of a segment's term rows land in one partition — the
-    # downstream window ranks raw rows without re-summing. Reading a store
+    # driver merge ranks raw rows without re-summing. Reading a store
     # from disk does NOT guarantee this (a parquet file larger than
     # spark.sql.files.maxPartitionBytes is SPLIT across input partitions),
     # so every path shuffles here. Post-filter the shuffled rows are tiny
     # (only query-term blocks).
-    candidates = (
+    return (
         packed.blocks.filter(term_filter)
         .repartition("segment")
         .mapInPandas(score_partition, schema="qid long, doc_id long, score double")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "score", "rank")
     )

@@ -208,7 +208,7 @@ def search_auto(
     The bound is clamped to wand_search's own hard capacity
     (max_queries_per_chunk · max_chunks_per_plan): for small k the work
     budget alone would admit batches the chunked WAND planner refuses
-    (its guard raises above 64 chunk closures), so anything beyond its
+    (its guard raises above 64 chunks of queries), so anything beyond its
     capacity routes to the join scorer instead of crashing through."""
     import inspect
 

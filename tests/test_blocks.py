@@ -6,7 +6,13 @@ from collections import defaultdict
 import numpy as np
 import pytest
 
-from fusion_spark.blocks import PackedIndex, varint_decode, varint_encode, wand_search
+from fusion_spark.blocks import (
+    PackedIndex,
+    VarintDecodeError,
+    varint_decode,
+    varint_encode,
+    wand_search,
+)
 from fusion_spark.indexing import build_index
 from fusion_spark.scoring import search
 
@@ -28,6 +34,35 @@ def test_varint_roundtrip_random():
 def test_varint_empty():
     assert varint_encode(np.zeros(0, dtype=np.uint64)) == b""
     assert varint_decode(b"", 0).tolist() == []
+
+
+def test_varint_truncated_blob_raises():
+    blob = varint_encode(np.array([300, 5, 70000], dtype=np.uint64))
+    with pytest.raises(VarintDecodeError, match="truncated"):
+        varint_decode(blob[:-1], 3)  # cut inside the last value
+    with pytest.raises(VarintDecodeError, match="holds 2 values, expected 3"):
+        varint_decode(blob[:3], 3)  # cut at a value boundary
+    with pytest.raises(VarintDecodeError):
+        varint_decode(b"", 2)
+    # all-1-byte shape: one value short of the count
+    with pytest.raises(VarintDecodeError, match="holds 2 values, expected 3"):
+        varint_decode(varint_encode(np.array([1, 2], dtype=np.uint64)), 3)
+
+
+def test_varint_overlong_blob_raises():
+    blob = varint_encode(np.array([300, 5, 70000], dtype=np.uint64))
+    with pytest.raises(VarintDecodeError, match="holds 3 values, expected 2"):
+        varint_decode(blob, 2)
+    with pytest.raises(VarintDecodeError, match="expected 0"):
+        varint_decode(blob, 0)
+    # all-1-byte shape, one value too many
+    with pytest.raises(VarintDecodeError, match="holds 4 values, expected 3"):
+        varint_decode(bytes([1, 2, 3, 4]), 3)
+    # length equals the count but a continuation byte merges two values:
+    # the 1-byte fast path must not accept it
+    with pytest.raises(VarintDecodeError, match="holds 2 values, expected 3"):
+        varint_decode(bytes([0x81, 0x01, 0x05]), 3)
+    assert issubclass(VarintDecodeError, ValueError)
 
 
 def _collect(df):
@@ -157,6 +192,8 @@ def test_disk_store_wand_correct_even_when_files_split(spark, docs_df, queries_d
     import contextlib
     import io
 
+    from fusion_spark.blocks import _wand_candidates
+
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     packed = PackedIndex.from_index(idx, segment_size=64)
     packed.write(str(tmp_path / "store"))
@@ -165,9 +202,14 @@ def test_disk_store_wand_correct_even_when_files_split(spark, docs_df, queries_d
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
         disk = PackedIndex.read(spark, str(tmp_path / "store"))
+        # wand_search returns a driver-merged local relation, so the plan
+        # guard reads the internal scoring frame it collects
+        term = disk.termstats.first()["term"]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            wand_search(disk, queries_df, k=5, k1=2.5, b=0.2).explain("formatted")
+            _wand_candidates(disk, {term: [(1, 1, 1.0)]}, [1], 5, 2.5, 0.2).explain(
+                "formatted"
+            )
         assert "hashpartitioning(segment" in buf.getvalue()
         a = _collect(wand_search(disk, queries_df, k=5, k1=2.5, b=0.2))
     finally:
@@ -259,9 +301,9 @@ def test_search_auto_routes_big_batches_off_wand(spark, docs_df, queries_df):
 
 def test_wand_mega_batch_guard_raises(spark, docs_df):
     """A direct wand_search call needing more than max_chunks_per_plan
-    chunks must raise (pointing at search_auto) instead of building a
-    hundreds-of-branches union plan with every chunk's query-term table
-    alive on the driver (r3 verdict #4)."""
+    chunks must raise (pointing at search_auto) instead of running hundreds
+    of chunked passes with every query's terms and top-k on the driver
+    (r3 verdict #4)."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     packed = PackedIndex.from_index(idx, segment_size=16)
     vocab = [r["term"] for r in idx.termstats.limit(3).collect()]
@@ -554,11 +596,42 @@ def test_merge_packed_rejects_overlapping_doc_ranges(spark, docs_df, tmp_path):
     assert forced.n_docs == 2 * idx.n_docs
 
 
+def test_wand_request_job_count(spark, docs_df, tmp_path):
+    """The serving path's fixed cost, pinned structurally: one matched
+    request, its collect included, submits ≤ 4 Spark jobs (query terms,
+    idf, segment shuffle, score collect), a no-match request ≤ 2, and the
+    caller's job description survives."""
+    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
+    store = PackedIndex.read(spark, str(tmp_path / "store"))
+    term = idx.termstats.orderBy("term").first()["term"]
+    sc = spark.sparkContext
+    schema = "struct<qid:bigint,doc_id:bigint,score:double,rank:int>"
+
+    def run(text, group):
+        q = spark.createDataFrame([(1, text)], "qid long, question string")
+        sc.setJobGroup(group, "caller")
+        try:
+            out = wand_search(store, q, k=5, k1=2.5, b=0.2)
+            rows = out.collect()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert out.schema.simpleString() == schema
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    rows, jobs = run(f"{term} {term}", "wand-jobs-matched")
+    assert len(rows) > 0 and jobs <= 4
+    rows, jobs = run("zzzznotaterm", "wand-jobs-nomatch")
+    assert rows == [] and jobs <= 2
+
+
 def test_wand_census_collect_is_bounded(spark, docs_df):
-    """r9 verdict #7: the distinct-qid census must not collect an unbounded
+    """r9 verdict #7: the query-term collect must not collect an unbounded
     frame — above max_queries_per_chunk × max_chunks_per_plan the call
     fails fast with the contract named (and the limit() means at most
-    cap+1 qids ever reached the driver)."""
+    cap+1 query rows ever reached the driver)."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     packed = PackedIndex.from_index(idx, segment_size=16)
     vocab = [r["term"] for r in idx.termstats.limit(3).collect()]
