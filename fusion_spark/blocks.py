@@ -1293,10 +1293,6 @@ def wand_search(
         sc.setJobDescription(caller_description)
 
 
-# the result frame's columns, in the dtypes that give (long, long, double, int)
-_WAND_RESULT_DTYPES = {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
-
-
 def _query_tf(
     queries: DataFrame, mode: str, max_queries_per_chunk: int, max_chunks_per_plan: int
 ) -> dict[int, Counter]:
@@ -1349,11 +1345,13 @@ def _ranked_frame(spark: SparkSession, parts: list[pd.DataFrame]) -> DataFrame:
     """Driver-side result as a local relation (Arrow), so collecting it
     launches no job. An empty pandas frame would take a one-job RDD path,
     so an empty result is a typed one-row frame cut by limit(0)."""
+    # dtypes that give the schema (qid long, doc_id long, score double, rank int)
+    dtypes = {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
     out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
     empty = out.empty
     if empty:
-        out = pd.DataFrame({c: [0] for c in _WAND_RESULT_DTYPES})
-    ranked = spark.createDataFrame(out[list(_WAND_RESULT_DTYPES)].astype(_WAND_RESULT_DTYPES))
+        out = pd.DataFrame({c: [0] for c in dtypes})
+    ranked = spark.createDataFrame(out[list(dtypes)].astype(dtypes))
     return ranked.limit(0) if empty else ranked
 
 
