@@ -870,12 +870,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         resumable build (wall_sec excluded — nondeterministic)."""
         import tempfile
 
-        from fusion_spark.indexing import build_index_resumable, lineage
+        from fusion_spark.indexing import build_index_resumable
+        from fusion_spark.shards import lineage
 
         d = tempfile.mkdtemp(prefix="lineage_")
         build_index_resumable(spark, _docs(spark, sf_dir), d, n_buckets=8)
         return lineage(spark, d).select(
-            "bucket", "status", "n_docs", "n_postings", "variant", "mode"
+            F.col("shard").alias("bucket"), "status", "n_docs", "n_postings",
+            "variant", "mode",
         )
 
     def doc_sketches(spark, sf_dir):

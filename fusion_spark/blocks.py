@@ -34,6 +34,8 @@ rank/score-identical to the exact v1 join scorer (verified in tests).
 from __future__ import annotations
 
 import heapq
+import json
+import os
 from collections import Counter
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -52,6 +54,7 @@ from pyspark.sql.types import (
 )
 
 from fusion_spark.indexing import BM25Index
+from fusion_spark.shards import build, read_manifest, shard_set
 from fusion_spark.tokenize import tokenize
 
 BLOCK_SCHEMA = StructType(
@@ -546,12 +549,10 @@ class PackedIndex:
         )
 
     def write(self, path: str) -> None:
-        import json as _json
-
         self.blocks.repartition("segment").write.mode("overwrite").parquet(f"{path}/blocks")
         self.termstats.write.mode("overwrite").parquet(f"{path}/termstats")
         with open(f"{path}/meta.json", "w") as f:
-            _json.dump(
+            json.dump(
                 {
                     "n_docs": self.n_docs,
                     "avgdl": self.avgdl,
@@ -563,10 +564,8 @@ class PackedIndex:
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "PackedIndex":
-        import json as _json
-
         with open(f"{path}/meta.json") as f:
-            meta = _json.load(f)
+            meta = json.load(f)
         return cls(
             blocks=spark.read.parquet(f"{path}/blocks"),
             termstats=spark.read.parquet(f"{path}/termstats"),
@@ -593,14 +592,12 @@ def merge_packed(
     conservative: shards with legitimately INTERLEAVED (still disjoint)
     doc_ids can share segments — pass check_disjoint=False for those, with
     the burden of the doc-level guarantee on the caller."""
-    import json as _json
-
     from fusion_spark.indexing import idf_expr
 
     metas = []
     for p in paths:
         with open(f"{p}/meta.json") as f:
-            metas.append(_json.load(f))
+            metas.append(json.load(f))
     seg = {m["segment_size"] for m in metas}
     var = {m["variant"] for m in metas}
     if len(seg) != 1 or len(var) != 1:
@@ -660,173 +657,6 @@ def merge_packed(
         blocks=blocks, termstats=termstats, n_docs=n_docs, avgdl=avgdl,
         segment_size=seg.pop(), variant=metas[0]["variant"],
     )
-
-
-# ------------------------ resumable / sharded pack --------------------------
-
-
-def _pack_manifest_path(store_dir: str) -> str:
-    import os
-
-    return os.path.join(store_dir, "_manifest.jsonl")
-
-
-def _read_pack_manifest(store_dir: str) -> tuple[dict | None, dict[int, dict]]:
-    """(plan, done-shards). The plan line pins (segment_size, n_shards,
-    id_range) so a resume with different knobs fails loudly instead of
-    silently mixing incompatible shard layouts."""
-    import json
-    import os
-
-    plan, done = None, {}
-    p = _pack_manifest_path(store_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                rec = json.loads(line)
-                if "plan" in rec:
-                    plan = rec["plan"]
-                elif rec.get("status") == "ok":
-                    done[rec["shard"]] = rec
-    return plan, done
-
-
-def pack_index_resumable(
-    spark: SparkSession,
-    index: BM25Index,
-    store_dir: str,
-    n_shards: int = 8,
-    segment_size: int | str = "auto",
-    compact: bool = False,
-) -> PackedIndex:
-    """Checkpointed pack — the pack-stage analogue of
-    `indexing.build_index_resumable` (the reference's resumable build has
-    no pack stage at all: `bm25.py` holds its dict index in memory).
-
-    The doc-id range splits into ``n_shards`` segment-ALIGNED spans; each
-    span packs to its own shard store under ``store_dir`` with a lineage
-    row appended to ``_manifest.jsonl``; completed shards are skipped on
-    restart, so a pack job killed at 90% re-does ~1/n_shards of the work,
-    not all of it. Returns the `merge_packed` union (disjointness guard
-    ON — alignment makes shard segment ranges disjoint by construction),
-    which is query-identical to a monolithic pack: blobs are per-(term,
-    segment) facts local to one shard, and df/idf/avgdl are recomputed
-    exactly at merge (BENCH.md r9: proven at ~1B postings / 4 shards and
-    at fan-in 64). ``compact=True`` additionally rewrites the union as a
-    single store at ``{store_dir}/compacted`` (block-level rewrite, no
-    re-encode — measured ~2.5× query-time file-open win) and returns that.
-
-    A resume must use the same (segment_size, n_shards) over the same
-    doc-id range as the original run — the manifest's plan line enforces
-    it loudly. ``segment_size="auto"`` on a resume adopts the plan line's
-    resolved size rather than re-deriving it from the live index, so a
-    slightly shifted df distribution cannot abort a resume whose caller
-    changed nothing.
-    """
-    import json
-    import os
-    import time
-
-    os.makedirs(store_dir, exist_ok=True)
-    plan, done = _read_pack_manifest(store_dir)
-
-    mx = index.docstats.agg(F.max("doc_id")).collect()[0][0]
-    id_range = (int(mx) + 1) if mx is not None else 0
-    if id_range == 0:
-        # an empty index would write a useless id_range=0 plan line and then
-        # crash inside merge_packed's no-paths parquet read (r9 ADVICE) —
-        # fail here with the actual cause, before touching the manifest
-        raise ValueError(
-            "pack_index_resumable: the index has no documents (empty "
-            "docstats → doc-id range 0) — nothing to pack. Build the index "
-            "over a non-empty corpus first."
-        )
-    if segment_size == "auto":
-        if plan is not None:
-            # resume: adopt the manifest plan's resolved size — re-deriving
-            # from the LIVE index can drift (df distribution shifts) and
-            # abort the plan-match check even though the caller changed
-            # nothing (r9 ADVICE); n_shards/id_range are still validated
-            seg = int(plan["segment_size"])
-        else:
-            seg = auto_segment_size(
-                index.termstats, index.n_docs, id_range=id_range
-            )
-    else:
-        seg = int(segment_size)
-    # segment-aligned shard width covering the id range
-    span = max((id_range + n_shards - 1) // n_shards, 1)
-    span = ((span + seg - 1) // seg) * seg
-    this_plan = {"segment_size": seg, "n_shards": n_shards,
-                 "id_range": id_range, "span": span}
-    if plan is not None and plan != this_plan:
-        raise ValueError(
-            "pack_index_resumable: resume with a DIFFERENT shard layout — "
-            f"manifest plan {plan} vs current {this_plan}. Finish the pack "
-            "with the original knobs or start a fresh store_dir."
-        )
-    if plan is None:
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({"plan": this_plan}) + "\n")
-
-    from fusion_spark.indexing import _finalize
-
-    shard_paths = []
-    for i in range(n_shards):
-        lo, hi = i * span, min((i + 1) * span, id_range)
-        if lo >= id_range:
-            break
-        path = os.path.join(store_dir, f"shard={i:04d}")
-        shard_paths.append(path)
-        if i in done:
-            continue
-        t0 = time.perf_counter()
-        si = _finalize(
-            index.postings.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            index.docstats.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            index.variant,
-        )
-        PackedIndex.from_index(si, segment_size=seg,
-                               num_partitions="auto").write(path)
-        # lineage metrics from the WRITTEN store's block metadata (columnar
-        # read of the tiny block-level columns, not a postings re-scan)
-        stats = spark.read.parquet(f"{path}/blocks").agg(
-            F.sum("n_docs").alias("n_postings"),
-            F.count("*").alias("n_blocks"),
-        ).collect()[0]
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({
-                "shard": i, "status": "ok", "doc_lo": lo, "doc_hi": hi,
-                "n_postings": int(stats["n_postings"] or 0),
-                "n_blocks": int(stats["n_blocks"]),
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            }) + "\n")
-
-    merged = merge_packed(spark, shard_paths)
-    if compact:
-        out = os.path.join(store_dir, "compacted")
-        merged.write(out)
-        return PackedIndex.read(spark, out)
-    return merged
-
-
-def pack_lineage(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Per-shard pack lineage/metrics table (mirrors `indexing.lineage`)."""
-    import json
-
-    _, done = _read_pack_manifest(store_dir)
-    rows = sorted(done.values(), key=lambda r: r["shard"])
-    return spark.createDataFrame(
-        [json.dumps(r) for r in rows], "string"
-    ).selectExpr(
-        "from_json(value, 'shard int, status string, doc_lo long, "
-        "doc_hi long, n_postings long, n_blocks long, wall_sec double') r"
-    ).select("r.*")
 
 
 # ------------------------- fused build → packed store -----------------------
@@ -934,7 +764,6 @@ def build_packed(
     `timings`, if a dict, receives per-phase walls (stats_pass,
     auto_resolution, pack_write, termstats_write) for bench attribution.
     """
-    import json as _json
     import time as _time
 
     from fusion_spark.indexing import idf_expr, _postings_from_tokens
@@ -1009,12 +838,16 @@ def build_packed(
     termstats.write.mode("overwrite").parquet(f"{store_dir}/termstats")
     _lap("termstats_write")
     with open(f"{store_dir}/meta.json", "w") as f:
-        _json.dump(
+        json.dump(
             {"n_docs": n_docs, "avgdl": avgdl,
              "segment_size": segment_size, "variant": variant},
             f,
         )
     return PackedIndex.read(spark, store_dir)
+
+
+# a packed sharded store keeps shard i under store_dir/shard=NNNN
+SHARD_DIR = "shard={:04d}"
 
 
 def build_packed_resumable(
@@ -1030,7 +863,6 @@ def build_packed_resumable(
     strategy: str = "sorted",
     stats_sample_fraction: float = 0.02,
     seed: int = 7,
-    compact: bool = False,
 ) -> PackedIndex:
     """Checkpointed fused build: `build_packed` per segment-aligned doc-id
     span, manifest lineage, skip-on-restart — the one-job production shape
@@ -1038,88 +870,55 @@ def build_packed_resumable(
     postings table NOR a monolithic single job is acceptable (a build that
     dies at 90% must not re-tokenize everything).
 
-    Same manifest contract as `pack_index_resumable`: a plan line pins
-    (segment_size, n_shards, id_range, span); a resume with different knobs
-    fails loudly; ``segment_size="auto"`` on resume adopts the plan's
+    The manifest protocol is `fusion_spark.shards`: a plan line pins
+    (segment_size, n_shards, id_range, span), so a resume with different
+    knobs fails loudly; ``segment_size="auto"`` on resume adopts the plan's
     resolved size. Each shard filters the corpus by doc-id range (parquet
     range pushdown — a shard scans only its rows), runs the fused build
-    into its own sub-store, and appends a lineage row with posting/block
-    counts from the written store's metadata columns. The returned index is
-    the `merge_packed` union (disjoint by construction — spans are
-    segment-aligned); df/idf/avgdl are recomputed exactly at merge, so the
-    result is query-identical to a monolithic build. ``compact=True``
-    rewrites the union into ``{store_dir}/compacted`` (block-level, no
-    re-encode) and returns that."""
-    import json
-    import os
-    import time
-
-    os.makedirs(store_dir, exist_ok=True)
-    plan, done = _read_pack_manifest(store_dir)
-
+    into its own sub-store, and appends a lineage row with posting/block/
+    file counts from the written store. The returned index is the
+    `merge_packed` union of the manifest's shard set (disjoint by
+    construction — spans are segment-aligned); df/idf/avgdl are recomputed
+    exactly at merge, so the result is query-identical to a monolithic
+    build. `compact_if` rewrites the union into one store."""
+    plan = read_manifest(store_dir)[0]
     base = docs.select(
         F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
     mx = base.agg(F.max("doc_id")).collect()[0][0]
     id_range = (int(mx) + 1) if mx is not None else 0
     if id_range == 0:
+        # fail with the actual cause before any manifest line is written
         raise ValueError(
             "build_packed_resumable: the corpus is empty (no doc ids) — "
             "nothing to build."
         )
-    if segment_size == "auto":
-        if plan is not None:
-            seg = int(plan["segment_size"])
-        else:
-            n_docs_total = base.count()
-            est = _estimate_pack_stats(
-                base, "doc_id", "text", mode, n_docs_total,
-                stats_sample_fraction, seed,
-            )
-            seg = auto_segment_size(est, n_docs_total, id_range=id_range)
-    else:
+    if segment_size != "auto":
         seg = int(segment_size)
+    elif plan is not None:
+        seg = int(plan["segment_size"])
+    else:
+        n_docs_total = base.count()
+        est = _estimate_pack_stats(
+            base, "doc_id", "text", mode, n_docs_total,
+            stats_sample_fraction, seed,
+        )
+        seg = auto_segment_size(est, n_docs_total, id_range=id_range)
     span = max((id_range + n_shards - 1) // n_shards, 1)
     span = ((span + seg - 1) // seg) * seg
-    this_plan = {"segment_size": seg, "n_shards": n_shards,
-                 "id_range": id_range, "span": span}
-    if plan is not None and plan != this_plan:
-        raise ValueError(
-            "build_packed_resumable: resume with a DIFFERENT shard layout — "
-            f"manifest plan {plan} vs current {this_plan}. Finish the build "
-            "with the original knobs or start a fresh store_dir."
-        )
-    if plan is None:
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({"plan": this_plan}) + "\n")
 
-    shard_paths = []
-    for i in range(n_shards):
+    def write(i: int) -> dict:
         lo, hi = i * span, min((i + 1) * span, id_range)
-        if lo >= id_range:
-            break
-        path = os.path.join(store_dir, f"shard={i:04d}")
-        if i in done:
-            if not done[i].get("empty"):
-                shard_paths.append(path)
-            continue
         shard_docs = base.filter(
             (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         )
         if shard_docs.limit(1).count() == 0:
             # sparse doc ids: a middle span can hold no docs — record it so
-            # a resume skips the probe, and keep it out of the merge set
-            # (build_packed refuses empty corpora; merge refuses empty
-            # stores — both by r9-ADVICE design)
-            with open(_pack_manifest_path(store_dir), "a") as f:
-                f.write(json.dumps({
-                    "shard": i, "status": "ok", "empty": True,
-                    "doc_lo": lo, "doc_hi": hi, "n_postings": 0,
-                    "n_blocks": 0, "wall_sec": 0.0,
-                }) + "\n")
-            continue
-        shard_paths.append(path)
-        t0 = time.perf_counter()
+            # a resume skips the probe, and keep it out of the shard set
+            # (build_packed refuses empty corpora; merge refuses empty stores)
+            return {"empty": True, "doc_lo": lo, "doc_hi": hi,
+                    "n_postings": 0, "n_blocks": 0, "n_files": 0}
+        path = os.path.join(store_dir, SHARD_DIR.format(i))
         build_packed(
             shard_docs,
             path,
@@ -1127,32 +926,45 @@ def build_packed_resumable(
             num_partitions="auto", strategy=strategy,
             stats_sample_fraction=stats_sample_fraction, seed=seed,
         )
-        stats = spark.read.parquet(f"{path}/blocks").agg(
-            F.sum("n_docs").alias("n_postings"),
-            F.count("*").alias("n_blocks"),
-        ).collect()[0]
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({
-                "shard": i, "status": "ok", "doc_lo": lo, "doc_hi": hi,
-                "n_postings": int(stats["n_postings"] or 0),
-                "n_blocks": int(stats["n_blocks"]),
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            }) + "\n")
+        return {"doc_lo": lo, "doc_hi": hi, **packed_shard_row(spark, path)}
 
-    merged = merge_packed(spark, shard_paths)
-    if compact:
-        out = os.path.join(store_dir, "compacted")
-        merged.write(out)
-        return PackedIndex.read(spark, out)
-    return merged
+    build(
+        store_dir,
+        {"segment_size": seg, "n_shards": n_shards, "id_range": id_range,
+         "span": span},
+        [i for i in range(n_shards) if i * span < id_range],
+        write,
+        "build_packed_resumable",
+    )
+    return merge_packed(spark, _packed_shards(store_dir)[0])
+
+
+def packed_shard_row(spark: SparkSession, path: str) -> dict:
+    """Lineage fields of a written packed shard: posting and block counts
+    from the block metadata columns (no blob decode) and the shard's own
+    block-file count, which `compact_if` sums for its threshold."""
+    blocks = spark.read.parquet(f"{path}/blocks")
+    stats = blocks.agg(
+        F.sum("n_docs").alias("n_postings"), F.count("*").alias("n_blocks")
+    ).collect()[0]
+    return {"n_postings": int(stats["n_postings"] or 0),
+            "n_blocks": int(stats["n_blocks"]),
+            "n_files": len(blocks.inputFiles())}
+
+
+def _packed_shards(store_dir: str) -> tuple[list[str], list[dict]]:
+    """(shard store paths, manifest rows) of a packed sharded store."""
+    rows = shard_set(store_dir, SHARD_DIR + "/meta.json")
+    return [os.path.join(store_dir, SHARD_DIR.format(r["shard"])) for r in rows], rows
 
 
 def compact_if(
     spark: SparkSession, store_dir: str, threshold_files: int = 48
 ) -> tuple[PackedIndex, str]:
-    """Compact-on-quiesce for a sharded store (`pack_index_resumable`
-    layout): serve the merged union while it is cheap, compact when the
-    accumulated file count makes per-query open overhead matter.
+    """Compact-on-quiesce for a packed sharded store (written by
+    `build_packed_resumable` or `streaming.incremental_packed_stream`):
+    serve the merged union while it is cheap, compact when the accumulated
+    file count makes per-query open overhead matter.
 
     BENCH.md r9 measured the shape this automates: a merged union costs
     ~2.5× per-query file-open overhead vs monolithic, and the block-level
@@ -1168,53 +980,49 @@ def compact_if(
     monolithic. `tools/bench_merge_fanin.py` reports the decision this
     default takes at its fan-in.
 
+    The shard set and its block-file count come from the store's manifest
+    (`fusion_spark.shards`), never from a directory listing.
+
     Decision, returned as (index, decision):
       * "already-compacted" — `{store_dir}/compacted` exists and its
-        `_source.json` signature (shard count + block-file count) matches
-        the live shards: read it, zero work. A later ingest wave changes
-        the signature, so a stale compaction is never served.
+        `_source.json` signature (shard ids + block-file count) matches
+        the manifest: read it, zero work. A later ingest wave changes the
+        signature, so a stale compaction is never served.
       * "union" — file count ≤ `threshold_files`: serve `merge_packed`
         directly (metadata-level, ~1.6 s at fan-in 64).
       * "compacted" — file count exceeds the threshold: rewrite block
         rows into `{store_dir}/compacted`, stamp the signature, serve it.
     """
-    import glob as _glob
-    import json as _json
-    import os
-
-    shard_paths = sorted(_glob.glob(os.path.join(store_dir, "shard=*")))
+    shard_paths, rows = _packed_shards(store_dir)
     if not shard_paths:
         raise ValueError(
-            f"compact_if: no shard=* stores under {store_dir!r} — expected "
-            "a pack_index_resumable layout."
+            f"compact_if: no shard listed in the manifest of {store_dir!r} — "
+            "expected a build_packed_resumable or incremental_packed_stream "
+            "store."
         )
-    files = [
-        f
-        for p in shard_paths
-        for f in _glob.glob(os.path.join(p, "blocks", "*.parquet"))
-    ]
-    sig = {"n_shards": len(shard_paths), "n_files": len(files)}
+    n_files = sum(r["n_files"] for r in rows)
+    sig = {"shards": [r["shard"] for r in rows], "n_files": n_files}
     comp = os.path.join(store_dir, "compacted")
     marker = os.path.join(comp, "_source.json")
     if os.path.exists(marker):
         with open(marker) as f:
-            if _json.load(f) == sig:
+            if json.load(f) == sig:
                 return PackedIndex.read(spark, comp), "already-compacted"
-    if len(files) <= threshold_files:
+    if n_files <= threshold_files:
         return merge_packed(spark, shard_paths), "union"
     merged = merge_packed(spark, shard_paths)
     merged.write(comp)
     # Stamp atomically (temp + rename) and stamp the signature CAPTURED AT
-    # DECISION TIME, never a re-listing: an ingest wave that lands between
-    # the decision and the stamp must make the marker mismatch on the next
-    # quiesce (so the stale compaction is recompacted, not served). A
-    # re-listed signature would match the new wave and serve a compaction
-    # that excludes it. The rename also means a crashed compaction leaves
-    # no marker at all — the next quiesce redoes the work instead of
-    # trusting a torn stamp.
+    # DECISION TIME, never a re-read of the manifest: an ingest wave that
+    # lands between the decision and the stamp must make the marker
+    # mismatch on the next quiesce (so the stale compaction is recompacted,
+    # not served). A re-read signature would match the new wave and serve a
+    # compaction that excludes it. The rename also means a crashed
+    # compaction leaves no marker at all — the next quiesce redoes the work
+    # instead of trusting a torn stamp.
     tmp_marker = marker + ".tmp"
     with open(tmp_marker, "w") as f:
-        _json.dump(sig, f)
+        json.dump(sig, f)
     os.replace(tmp_marker, marker)
     return PackedIndex.read(spark, comp), "compacted"
 

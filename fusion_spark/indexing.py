@@ -25,24 +25,21 @@ Spark design (scale notes):
     against a 10^12-row docstats table at scale; storage cost is one int32
     per posting.
   * N and avgdl are two scalars collected once and broadcast as literals.
-  * Resumable build: documents are bucketed by `pmod(doc_id, n_buckets)`;
-    each bucket's postings are written to its own parquet subdirectory with
-    a manifest row appended on success. A re-run skips completed buckets
-    (idempotent, byte-identical results since tf/dl are per-doc facts and
-    bucket membership is deterministic). Global stats (df/idf/N/avgdl) are
-    derived from the union of bucket postings at finalize time.
+  * Resumable build: one `pmod(doc_id, n_buckets)` bucket per shard of the
+    `fusion_spark.shards` manifest protocol; global stats (df/idf/N/avgdl)
+    are derived from the union of bucket postings at finalize time.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fusion_spark.shards import build, shard_set
 from fusion_spark.tokenize import tokenize
 
 VARIANTS = ("bm25", "tfidf", "atire")
@@ -181,24 +178,6 @@ def _finalize(postings: DataFrame, docstats: DataFrame, variant: str) -> BM25Ind
 # ---------------------------------------------------------------------------
 
 
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "_manifest.jsonl")
-
-
-def _read_manifest(index_dir: str) -> dict[int, dict]:
-    done = {}
-    p = _manifest_path(index_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    rec = json.loads(line)
-                    if rec.get("status") == "ok":
-                        done[rec["bucket"]] = rec
-    return done
-
-
 def build_index_resumable(
     spark: SparkSession,
     docs: DataFrame,
@@ -213,15 +192,13 @@ def build_index_resumable(
     bucket's postings independently, append a lineage row per bucket, skip
     completed buckets on restart. Produces a byte-identical index regardless
     of where a previous run died (tf/dl are per-doc facts; df/idf are
-    recomputed from the full postings union at finalize)."""
-    os.makedirs(index_dir, exist_ok=True)
-    done = _read_manifest(index_dir)
+    recomputed from the full postings union at finalize). The plan line
+    pins (n_buckets, variant, mode): resuming a partial build with another
+    bucket count would mix two pmod layouts, so it fails loudly instead
+    (`fusion_spark.shards`)."""
     docs = docs.select(F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("text"))
 
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        t0 = time.perf_counter()
+    def write(b: int) -> dict:
         bucket_docs = docs.filter(F.pmod(F.col("doc_id"), F.lit(n_buckets)) == b)
         toks = tokenize(bucket_docs, text_col="text", mode=mode).withColumn("dl", F.size("tokens"))
         postings_b = _postings_from_tokens(toks, "doc_id")
@@ -233,44 +210,22 @@ def build_index_resumable(
             os.path.join(index_dir, f"docstats_bucket={b}")
         )
         n_postings = spark.read.parquet(out).count()
-        n_docs_b = bucket_docs.count()
-        with open(_manifest_path(index_dir), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "bucket": b,
-                        "status": "ok",
-                        "n_docs": n_docs_b,
-                        "n_postings": n_postings,
-                        "wall_sec": round(time.perf_counter() - t0, 3),
-                        "variant": variant,
-                        "mode": mode,
-                    }
-                )
-                + "\n"
-            )
+        return {"n_docs": bucket_docs.count(), "n_postings": n_postings,
+                "variant": variant, "mode": mode}
 
-    return load_index(spark, index_dir, variant=variant, finalize=True)
+    build(index_dir, {"n_buckets": n_buckets, "variant": variant, "mode": mode},
+          range(n_buckets), write, "build_index_resumable")
+    return load_index(spark, index_dir, variant=variant)
 
 
-def load_index(
-    spark: SparkSession, index_dir: str, variant: str = "bm25", finalize: bool = True
-) -> BM25Index:
-    paths = [
-        os.path.join(index_dir, d)
-        for d in sorted(os.listdir(index_dir))
-        if d.startswith("postings_bucket=")
-    ]
-    postings = spark.read.parquet(*paths)
-    ds_paths = [
-        os.path.join(index_dir, d)
-        for d in sorted(os.listdir(index_dir))
-        if d.startswith("docstats_bucket=")
-    ]
-    if ds_paths:
-        docstats = spark.read.parquet(*ds_paths)
-    else:  # legacy stores: token-less docs unrecoverable — derive from postings
-        docstats = postings.select("doc_id", "dl").distinct()
+def load_index(spark: SparkSession, index_dir: str, variant: str = "bm25") -> BM25Index:
+    """Read a `build_index_resumable` store: the bucket set comes from its
+    manifest, never from a directory listing."""
+    buckets = [r["shard"] for r in shard_set(index_dir, "postings_bucket={}", "docstats_bucket={}")]
+    if not buckets:
+        raise ValueError(f"load_index: no bucket listed in the manifest of {index_dir!r}")
+    postings = spark.read.parquet(*[os.path.join(index_dir, f"postings_bucket={b}") for b in buckets])
+    docstats = spark.read.parquet(*[os.path.join(index_dir, f"docstats_bucket={b}") for b in buckets])
     return _finalize(postings, docstats, variant)
 
 
@@ -291,10 +246,8 @@ def write_term_bucketed_store(index: BM25Index, path: str, n_buckets: int = 64) 
     )
     index.docstats.write.mode("overwrite").parquet(f"{path}/docstats")
     index.termstats.write.mode("overwrite").parquet(f"{path}/termstats")
-    import json as _json
-
     with open(f"{path}/meta.json", "w") as f:
-        _json.dump(
+        json.dump(
             {"n_docs": index.n_docs, "avgdl": index.avgdl, "variant": index.variant,
              "n_term_buckets": n_buckets},
             f,
@@ -302,10 +255,8 @@ def write_term_bucketed_store(index: BM25Index, path: str, n_buckets: int = 64) 
 
 
 def load_term_bucketed_store(spark: SparkSession, path: str) -> BM25Index:
-    import json as _json
-
     with open(f"{path}/meta.json") as f:
-        meta = _json.load(f)
+        meta = json.load(f)
     postings = spark.read.parquet(f"{path}/postings").drop("term_bucket")
     # NB: keep the partition column for pruning when filtering manually:
     # spark.read.parquet(...).filter(term_bucket IN ...) — scoring.score's
@@ -327,10 +278,8 @@ def load_term_bucketed_pruned(
     """Load the bucketed store with directory-level pruning for a known
     query-term set: only the partitions whose bucket hosts a query term are
     listed/read."""
-    import json as _json
-
     with open(f"{path}/meta.json") as f:
-        meta = _json.load(f)
+        meta = json.load(f)
     n_b = meta["n_term_buckets"]
     tdf = spark.createDataFrame([(t,) for t in terms], "term string")
     buckets = sorted(
@@ -349,13 +298,4 @@ def load_term_bucketed_pruned(
         n_docs=meta["n_docs"],
         avgdl=meta["avgdl"],
         variant=meta["variant"],
-    )
-
-
-def lineage(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The per-bucket lineage/metrics table (north rule artifact)."""
-    recs = list(_read_manifest(index_dir).values())
-    return spark.createDataFrame(
-        recs or [],
-        schema="bucket int, status string, n_docs long, n_postings long, wall_sec double, variant string, mode string",
     )

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fusion_spark.indexing import BM25Index, _finalize, _postings_from_tokens
+from fusion_spark.shards import build, shard_set
 from fusion_spark.tokenize import tokenize
 
 
@@ -66,46 +67,50 @@ def incremental_packed_stream(
     compact_threshold_files: int = 48,
 ):
     """Packed-store twin of `incremental_index_stream`, with the
-    compact-on-quiesce hook WIRED IN (r10 shipped `blocks.compact_if` but
-    the ingest loop never called it — the 'call this between waves' step
-    was prose): each micro-batch fuses tokenize → aggregate → pack into its
-    own `shard=<batch_id>` sub-store (`build_packed`, doc-id-disjoint by
-    the landing contract), and after the wave drains the quiesce epilogue
-    runs `compact_if` — serving the metadata-level union while the file
-    count is small and rewriting block rows into `{store_dir}/compacted`
-    once accumulated shards cross `compact_threshold_files` (the fan-in
-    point where BENCH.md r9 measured ~2.5× per-query open overhead). A
-    later wave changes the shard signature, so a stale compaction is never
-    served.
+    compact-on-quiesce hook wired in: each non-empty micro-batch fuses
+    tokenize → aggregate → pack into its own `shard=<batch_id>` sub-store
+    (`build_packed`, doc-id-disjoint by the landing contract) and commits
+    it to the store's manifest (`fusion_spark.shards`; the plan line pins
+    segment_size and mode across waves, and a batch replayed after a crash
+    skips a committed shard and rewrites an uncommitted one). After the
+    wave drains, the quiesce epilogue runs `compact_if` — serving the
+    metadata-level union while the file count is small and rewriting block
+    rows into `{store_dir}/compacted` once accumulated shards cross
+    `compact_threshold_files` (the fan-in point where BENCH.md r9 measured
+    ~2.5× per-query open overhead). A later wave changes the shard
+    signature, so a stale compaction is never served.
 
     Runs availableNow (drain the backlog, quiesce, return); a live
     deployment triggers the same foreachBatch on a processingTime schedule
     and calls `blocks.compact_if` from its own quiesce/maintenance window.
-    Returns (PackedIndex, decision) from `compact_if`.
+    Returns (PackedIndex, decision) from `compact_if`, or (None, "empty")
+    while no non-empty micro-batch has landed.
 
     Ingest contract: micro-batch doc-id spans must land on multiples of
     `segment_size` (the id-assignment layer routes by
     doc_id // segment_size), because `merge_packed` — and therefore the
     quiesce's `compact_if` — validates shard disjointness at SEGMENT
-    granularity (the same alignment `pack_index_resumable` enforces on its
-    own spans). Interleaved-but-disjoint id layouts bypass the hook and
+    granularity (the same alignment `build_packed_resumable` enforces on
+    its own spans). Interleaved-but-disjoint id layouts bypass the hook and
     call `merge_packed(check_disjoint=False)` from a caller-owned quiesce.
     """
     import os
 
-    from fusion_spark.blocks import build_packed, compact_if
+    from fusion_spark.blocks import SHARD_DIR, build_packed, compact_if, packed_shard_row
 
     stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def pack_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.limit(1).count() == 0:
             return  # build_packed refuses empty corpora (r9 ADVICE guard)
-        build_packed(
-            batch_df,
-            os.path.join(store_dir, f"shard={batch_id:04d}"),
-            mode=mode,
-            segment_size=segment_size,
-        )
+
+        def write(i: int) -> dict:
+            path = os.path.join(store_dir, SHARD_DIR.format(i))
+            build_packed(batch_df, path, mode=mode, segment_size=segment_size)
+            return packed_shard_row(spark, path)
+
+        build(store_dir, {"segment_size": segment_size, "mode": mode},
+              [batch_id], write, "incremental_packed_stream")
 
     q = (
         stream.writeStream.foreachBatch(pack_batch)
@@ -114,6 +119,8 @@ def incremental_packed_stream(
         .start()
     )
     q.awaitTermination()
+    if not shard_set(store_dir):
+        return None, "empty"
     return compact_if(spark, store_dir, threshold_files=compact_threshold_files)
 
 

@@ -42,7 +42,8 @@ def main():
     from pyspark.sql import SparkSession
 
     from fusion_spark.blocks import PackedIndex, build_packed_resumable
-    from fusion_spark.indexing import build_index_resumable, lineage
+    from fusion_spark.indexing import build_index_resumable
+    from fusion_spark.shards import lineage
 
     spark = SparkSession.builder.appName("fusion-spark-index-build").getOrCreate()
     docs = spark.read.parquet(args.input)

@@ -642,106 +642,22 @@ def test_wand_census_collect_is_bounded(spark, docs_df):
         wand_search(packed, qs, k=2, max_queries_per_chunk=2, max_chunks_per_plan=2)
 
 
-def test_pack_index_resumable_identity_and_skip(spark, docs_df, queries_df, tmp_path):
-    """r9: the pack-stage resumability analogue of build_index_resumable —
-    WAND identity with the monolithic pack, completed shards skipped on
-    restart (mtimes untouched), lineage table populated, and a resume with
-    different knobs rejected loudly via the manifest's plan line."""
-    import os
-    import time as _time
-
-    from fusion_spark.blocks import pack_index_resumable, pack_lineage
-
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    store = str(tmp_path / "rstore")
-    merged = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
-    mono = PackedIndex.from_index(idx, segment_size=16)
-    qs = queries_df
-
-    def topk(p):
-        return sorted(
-            (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in wand_search(p, qs, k=5, k1=2.5, b=0.2).collect()
-        )
-
-    assert topk(merged) == topk(mono)
-    assert merged.n_docs == mono.n_docs
-
-    lin = pack_lineage(spark, store).collect()
-    assert [r["shard"] for r in lin] == sorted(r["shard"] for r in lin)
-    assert sum(r["n_postings"] for r in lin) == idx.postings.count()
-
-    # restart: every shard complete -> no shard store is rewritten
-    shard_dirs = sorted(
-        os.path.join(store, d) for d in os.listdir(store) if d.startswith("shard=")
-    )
-    assert len(shard_dirs) == len(lin) >= 2
-    mtimes = {d: os.path.getmtime(os.path.join(d, "meta.json")) for d in shard_dirs}
-    _time.sleep(0.05)
-    again = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
-    assert topk(again) == topk(mono)
-    for d, m in mtimes.items():
-        assert os.path.getmtime(os.path.join(d, "meta.json")) == m
-
-    # a dead run = some shards missing from the manifest: drop the last
-    # shard's lineage row and its store; resume must redo ONLY that shard
-    manifest = os.path.join(store, "_manifest.jsonl")
-    lines = [ln for ln in open(manifest).read().splitlines() if ln.strip()]
-    import json as _json
-
-    keep = [ln for ln in lines if _json.loads(ln).get("shard") != lin[-1]["shard"]]
-    with open(manifest, "w") as f:
-        f.write("\n".join(keep) + "\n")
-    import shutil as _shutil
-
-    _shutil.rmtree(shard_dirs[-1])
-    resumed = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
-    assert topk(resumed) == topk(mono)
-    for d, m in list(mtimes.items())[:-1]:
-        assert os.path.getmtime(os.path.join(d, "meta.json")) == m
-
-    # layout drift is rejected, not silently mixed
-    with pytest.raises(ValueError, match="DIFFERENT shard layout"):
-        pack_index_resumable(spark, idx, store, n_shards=4, segment_size=16)
-
-
-def test_pack_index_resumable_compact(spark, docs_df, queries_df, tmp_path):
-    """compact=True returns a single re-packed store with identical top-k."""
-    from fusion_spark.blocks import pack_index_resumable
-
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    store = str(tmp_path / "cstore")
-    compacted = pack_index_resumable(
-        spark, idx, store, n_shards=2, segment_size=16, compact=True
-    )
-    mono = PackedIndex.from_index(idx, segment_size=16)
-    a = sorted(
-        (r["qid"], r["rank"], r["doc_id"])
-        for r in wand_search(compacted, queries_df, k=5, k1=2.5, b=0.2).collect()
-    )
-    b = sorted(
-        (r["qid"], r["rank"], r["doc_id"])
-        for r in wand_search(mono, queries_df, k=5, k1=2.5, b=0.2).collect()
-    )
-    assert a == b
-    import os
-
-    assert os.path.exists(os.path.join(store, "compacted", "meta.json"))
-
-
 def test_compact_if_thresholds_and_idempotence(spark, docs_df, queries_df, tmp_path):
     """r10 #6: compact_if serves the cheap merged union below the file-count
     threshold, triggers the block-level rewrite above it, and on a repeat
     call with an unchanged store serves the existing compaction with zero
     work — all three decisions query-identical to the monolithic pack."""
     import glob
+    import json
     import os
 
-    from fusion_spark.blocks import compact_if, pack_index_resumable
+    from fusion_spark.blocks import build_packed_resumable, compact_if
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "qstore")
-    pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
+    build_packed_resumable(
+        spark, docs_df, store, n_shards=3, text_col="content", segment_size=16
+    )
     n_files = len(glob.glob(os.path.join(store, "shard=*", "blocks", "*.parquet")))
     assert n_files >= 2
     mono = PackedIndex.from_index(idx, segment_size=16)
@@ -776,12 +692,19 @@ def test_compact_if_thresholds_and_idempotence(spark, docs_df, queries_df, tmp_p
     # a changed shard set invalidates the stale compaction: signature
     # mismatch → the threshold decision re-runs, not "already". Simulate
     # the change by dropping a shard (doc-id ranges stay disjoint, so the
-    # merge guard keeps holding — a copied shard would rightly trip it).
+    # merge guard keeps holding — a copied shard would rightly trip it):
+    # its directory and its manifest row, since the manifest is the shard set.
     import shutil as _shutil
 
     shards = sorted(glob.glob(os.path.join(store, "shard=*")))
     assert len(shards) >= 2  # need one left after the drop
     _shutil.rmtree(shards[-1])
+    dropped = int(shards[-1].rsplit("=", 1)[1])
+    manifest = os.path.join(store, "_manifest.jsonl")
+    with open(manifest) as f:
+        lines = [ln for ln in f if json.loads(ln).get("shard") != dropped]
+    with open(manifest, "w") as f:
+        f.writelines(lines)
     _, decision = compact_if(spark, store, threshold_files=10_000)
     assert decision == "union"
 
@@ -804,10 +727,13 @@ def test_compact_if_concurrent_wave_between_decision_and_stamp(
     from pyspark.sql import functions as F
 
     from fusion_spark import blocks as B
+    from fusion_spark import shards
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "cstore")
-    B.pack_index_resumable(spark, idx, store, n_shards=2, segment_size=16)
+    B.build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
 
     # the "concurrent" wave: a disjoint higher-id shard prepared up front
     late_docs = docs_df.select(
@@ -824,7 +750,10 @@ def test_compact_if_concurrent_wave_between_decision_and_stamp(
         out = real_merge(spark_, paths, **kw)
         if not injected["done"]:
             # the wave lands after the merge read but before the stamp
-            shutil.copytree(late_path, os.path.join(store, "shard=9990"))
+            late_shard = os.path.join(store, "shard=9990")
+            shutil.copytree(late_path, late_shard)
+            shards.append(store, {"shard": 9990, "status": "ok",
+                                  **B.packed_shard_row(spark_, late_shard)})
             injected["done"] = True
         return out
 
@@ -845,25 +774,6 @@ def test_compact_if_concurrent_wave_between_decision_and_stamp(
         for r in wand_search(p2, queries_df, k=10, k1=2.5, b=0.2).collect()
     }
     assert any(d >= 64 for d in served_docs) or p2.n_docs == idx.n_docs + late_idx.n_docs
-
-
-def test_pack_index_resumable_empty_index_raises(spark, tmp_path):
-    """r9 ADVICE: an empty index (no docstats → id_range 0) must fail with
-    the actual cause BEFORE writing a plan line, not crash later inside
-    merge_packed's no-paths parquet read."""
-    import os
-
-    from fusion_spark.blocks import pack_index_resumable
-
-    empty = build_index(
-        spark.createDataFrame([], "doc_id long, content string"),
-        doc_id_col="doc_id",
-        text_col="content",
-    )
-    store = str(tmp_path / "estore")
-    with pytest.raises(ValueError, match="no documents"):
-        pack_index_resumable(spark, empty, store, n_shards=2, segment_size=16)
-    assert not os.path.exists(os.path.join(store, "_manifest.jsonl"))
 
 
 def test_merge_packed_guard_rejects_unparseable_store_paths(spark, docs_df, tmp_path):
@@ -888,34 +798,6 @@ def test_merge_packed_guard_rejects_unparseable_store_paths(spark, docs_df, tmp_
              "segment_size": p.segment_size, "variant": p.variant}, f)
     with pytest.raises(ValueError, match="could not attribute"):
         merge_packed(spark, [bad])
-
-
-def test_pack_index_resumable_auto_adopts_manifest_segment_size(
-    spark, docs_df, queries_df, tmp_path
-):
-    """r9 ADVICE: a resume with segment_size='auto' adopts the manifest
-    plan's resolved size instead of re-deriving it from the live index —
-    re-derivation drifts with the df distribution and aborted resumes whose
-    caller changed nothing."""
-    from fusion_spark.blocks import pack_index_resumable
-
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    store = str(tmp_path / "astore")
-    # original run pins segment_size=16 in the plan line; auto would derive
-    # something else entirely (the 4096 floor at this corpus size)
-    pack_index_resumable(spark, idx, store, n_shards=2, segment_size=16)
-    resumed = pack_index_resumable(spark, idx, store, n_shards=2, segment_size="auto")
-    assert resumed.segment_size == 16
-    mono = PackedIndex.from_index(idx, segment_size=16)
-    a = sorted(
-        (r["qid"], r["rank"], r["doc_id"])
-        for r in wand_search(resumed, queries_df, k=5).collect()
-    )
-    b = sorted(
-        (r["qid"], r["rank"], r["doc_id"])
-        for r in wand_search(mono, queries_df, k=5).collect()
-    )
-    assert a == b
 
 
 # ------------------------- fused build → packed store -----------------------
@@ -1020,6 +902,7 @@ def test_build_packed_resumable_identity_skip_and_plan_guard(
     import os
 
     from fusion_spark.blocks import build_packed, build_packed_resumable
+    from fusion_spark.shards import lineage
 
     store = str(tmp_path / "fusedshards")
     merged = build_packed_resumable(
@@ -1034,6 +917,13 @@ def test_build_packed_resumable_identity_skip_and_plan_guard(
     assert a == b
     assert merged.n_docs == mono.n_docs
     assert merged.avgdl == pytest.approx(mono.avgdl)
+
+    # lineage: one row per shard, in shard order, accounting every posting
+    lin = lineage(spark, store).collect()
+    assert len(lin) >= 2
+    assert [r["shard"] for r in lin] == sorted(r["shard"] for r in lin)
+    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    assert sum(r["n_postings"] for r in lin) == idx.postings.count()
 
     # skip-on-restart: no shard store file is rewritten
     mtimes = {}
@@ -1056,17 +946,107 @@ def test_build_packed_resumable_identity_skip_and_plan_guard(
         )
 
 
+def test_build_packed_resumable_auto_adopts_manifest_segment_size(
+    spark, docs_df, queries_df, tmp_path
+):
+    """A resume with segment_size='auto' adopts the manifest plan's resolved
+    size instead of re-deriving it from the live corpus — re-derivation
+    drifts with the df distribution and aborted resumes whose caller
+    changed nothing."""
+    from fusion_spark.blocks import build_packed, build_packed_resumable
+
+    store = str(tmp_path / "astore")
+    # the original run pins segment_size=16 in the plan line; auto would
+    # derive something else entirely (the 4096 floor at this corpus size)
+    build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
+    resumed = build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content",
+        segment_size="auto",
+    )
+    assert resumed.segment_size == 16
+    mono = build_packed(
+        docs_df, str(tmp_path / "amono"), text_col="content", segment_size=16
+    )
+    assert _collect(wand_search(resumed, queries_df, k=5)) == _collect(
+        wand_search(mono, queries_df, k=5)
+    )
+
+
+def test_build_packed_resumable_empty_corpus_raises(spark, tmp_path):
+    """An empty corpus fails with the actual cause BEFORE a plan line is
+    written, not later inside merge_packed's no-paths parquet read."""
+    import os
+
+    from fusion_spark.blocks import build_packed_resumable
+
+    empty = spark.createDataFrame([], "doc_id long, content string")
+    store = str(tmp_path / "estore")
+    with pytest.raises(ValueError, match="empty"):
+        build_packed_resumable(
+            spark, empty, store, n_shards=2, text_col="content", segment_size=16
+        )
+    assert not os.path.exists(os.path.join(store, "_manifest.jsonl"))
+
+
+def test_compact_if_ignores_shard_dir_missing_from_manifest(
+    spark, docs_df, queries_df, tmp_path
+):
+    """Stale listing, one way: a half-written shard directory (blocks, no
+    meta.json, no manifest row) is not part of the store — compact_if
+    serves exactly the manifest's shard set."""
+    import os
+    import shutil
+
+    from fusion_spark.blocks import build_packed_resumable, compact_if
+
+    store = str(tmp_path / "extrastore")
+    merged = build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
+    want = _collect(wand_search(merged, queries_df, k=10))
+    shutil.copytree(
+        os.path.join(store, "shard=0000", "blocks"),
+        os.path.join(store, "shard=0099", "blocks"),
+    )
+    p, decision = compact_if(spark, store, threshold_files=10_000)
+    assert decision == "union"
+    assert p.n_docs == merged.n_docs
+    assert _collect(wand_search(p, queries_df, k=10)) == want
+
+
+@pytest.mark.parametrize("damage", ["shard_dir", "meta"])
+def test_compact_if_listed_shard_missing_raises_named(
+    spark, docs_df, tmp_path, damage
+):
+    """Stale listing, the other way: a manifest row whose shard directory
+    or meta.json is gone raises a ValueError naming the shard, not a bare
+    FileNotFoundError from the reader."""
+    import os
+    import shutil
+
+    from fusion_spark.blocks import build_packed_resumable, compact_if
+
+    store = str(tmp_path / "gonestore")
+    build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
+    if damage == "shard_dir":
+        shutil.rmtree(os.path.join(store, "shard=0001"))
+    else:
+        os.remove(os.path.join(store, "shard=0001", "meta.json"))
+    with pytest.raises(ValueError, match="shard 1 is listed"):
+        compact_if(spark, store, threshold_files=10_000)
+
+
 def test_build_packed_resumable_sparse_ids_skip_empty_shards(
     spark, tmp_path
 ):
     """With sparse doc ids a middle span can be docless: it is recorded in
     the manifest (resume skips the probe) and excluded from the merge."""
-    from fusion_spark.blocks import (
-        _read_pack_manifest,
-        build_packed,
-        build_packed_resumable,
-        wand_search,
-    )
+    from fusion_spark.blocks import build_packed, build_packed_resumable, wand_search
+    from fusion_spark.shards import read_manifest
 
     rows = [(i, f"alpha t{i} beta") for i in range(8)]
     rows += [(1000 + i, f"gamma t{i} delta") for i in range(8)]
@@ -1075,7 +1055,7 @@ def test_build_packed_resumable_sparse_ids_skip_empty_shards(
     merged = build_packed_resumable(
         spark, docs, store, n_shards=8, text_col="content", segment_size=16
     )
-    _plan, done = _read_pack_manifest(store)
+    _plan, done = read_manifest(store)
     empties = [r for r in done.values() if r.get("empty")]
     assert empties, "expected at least one docless span"
     mono = build_packed(

@@ -7,7 +7,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from fusion_spark.indexing import build_index, build_index_resumable, lineage, load_index
+from fusion_spark.indexing import build_index, build_index_resumable, load_index
+from fusion_spark.shards import lineage
 
 
 def test_stats_match_reference_definitions(spark, docs_df, corpus_rows):
@@ -52,7 +53,7 @@ def test_resumable_build_identical_and_skips_done(spark, docs_df, tmp_path):
     shutil.copytree(d1, d2, dirs_exist_ok=True)
     with open(os.path.join(d2, "_manifest.jsonl")) as f:
         recs = [json.loads(x) for x in f if x.strip()]
-    keep = [r for r in recs if r["bucket"] < 2]
+    keep = [r for r in recs if "plan" in r or r["shard"] < 2]
     with open(os.path.join(d2, "_manifest.jsonl"), "w") as f:
         for r in keep:
             f.write(json.dumps(r) + "\n")
@@ -69,7 +70,33 @@ def test_resumable_build_identical_and_skips_done(spark, docs_df, tmp_path):
     # lineage table has one ok row per bucket; resumed run kept originals for 0-1
     lin = lineage(spark, d2)
     assert lin.count() == 4
-    assert set(r["bucket"] for r in lin.collect()) == {0, 1, 2, 3}
+    assert set(r["shard"] for r in lin.collect()) == {0, 1, 2, 3}
+
+
+def test_resumable_build_rejects_different_bucket_count(spark, docs_df, tmp_path):
+    """A partial 4-bucket build resumed with n_buckets=8 would mix two
+    pmod layouts (docs counted twice, others dropped); the plan line makes
+    it fail loudly and leaves the manifest untouched."""
+    import shutil
+
+    d = str(tmp_path / "idx_plan")
+    build_index_resumable(spark, docs_df, d, n_buckets=4, text_col="content")
+    manifest = os.path.join(d, "_manifest.jsonl")
+    with open(manifest) as f:
+        recs = [json.loads(x) for x in f if x.strip()]
+    with open(manifest, "w") as f:
+        for r in recs:
+            if "plan" in r or r["shard"] < 2:
+                f.write(json.dumps(r) + "\n")
+    for b in (2, 3):
+        shutil.rmtree(os.path.join(d, f"postings_bucket={b}"))
+        shutil.rmtree(os.path.join(d, f"docstats_bucket={b}"))
+    with open(manifest) as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="DIFFERENT shard layout"):
+        build_index_resumable(spark, docs_df, d, n_buckets=8, text_col="content")
+    with open(manifest) as f:
+        assert f.read() == before
 
 
 def test_load_index_roundtrip(spark, docs_df, tmp_path):

@@ -102,6 +102,22 @@ def test_incremental_packed_compact_on_quiesce(spark, docs_df, queries_df, tmp_p
     wand_vs_exact(packed, 2)
 
 
+def test_incremental_packed_empty_landing_is_defined(spark, tmp_path):
+    """An ingest that has landed nothing yet returns (None, "empty") instead
+    of raising from the quiesce's compact_if."""
+    import os
+
+    from fusion_spark.streaming import incremental_packed_stream
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    packed, dec = incremental_packed_stream(
+        spark, landing, str(tmp_path / "store"), str(tmp_path / "ckpt"),
+        segment_size=16,
+    )
+    assert (packed, dec) == (None, "empty")
+
+
 def test_watermarked_append_matches_complete(spark, tmp_path):
     """The watermark+append file-sink variant emits exactly the complete-mode
     result for every real window once later sentinel batches advance the

@@ -1,9 +1,10 @@
 """SIGKILL-resume proof for the FUSED sharded build (r10 verdict #7).
 
-The two-phase path (`pack_index_resumable`) has a real kill-9 proof at
+The since-removed two-phase sharded pack had a real kill-9 proof at
 99.2M postings (BENCH.md r9). This repeats the experiment on
-`build_packed_resumable` — the fused corpus→store build that is now the
-shipping default — at the same scale:
+`build_packed_resumable` — the fused corpus→store build and the one
+sharded packed producer — at the same scale (tests/test_blocks.py's
+crash-at-every-manifest-write test is the small-scale twin):
 
   1. generate the deterministic 1.44M-doc corpus (same generator as
      tools/bench_fused_build.py; ~99M distinct postings);
@@ -72,18 +73,9 @@ def _worker(docs_dir: str, store_dir: str, n_shards: int) -> None:
 
 
 def _manifest_ok_shards(store_dir: str) -> set[int]:
-    p = os.path.join(store_dir, "_manifest.jsonl")
-    done = set()
-    if os.path.exists(p):
-        with open(p) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                rec = json.loads(line)
-                if rec.get("status") == "ok":
-                    done.add(rec["shard"])
-    return done
+    from fusion_spark.shards import read_manifest
+
+    return set(read_manifest(store_dir)[1])
 
 
 def _fingerprint(spark, store_paths: list[str]) -> dict:
@@ -172,10 +164,10 @@ def main() -> None:
 
         spark = get_spark(app_name="fusedkill-compare", cores=8,
                           shuffle_partitions=16)
-        shards = lambda root: sorted(  # noqa: E731
-            glob.glob(os.path.join(root, "shard=*")))
-        fa = _fingerprint(spark, shards(control))
-        fb = _fingerprint(spark, shards(victim))
+        from fusion_spark.blocks import _packed_shards
+
+        fa = _fingerprint(spark, _packed_shards(control)[0])
+        fb = _fingerprint(spark, _packed_shards(victim)[0])
         spark.stop()
         report["fingerprint_control"] = fa
         report["fingerprint_resumed"] = fb

@@ -31,10 +31,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from fusion_spark.blocks import (  # noqa: E402
-    PackedIndex, compact_if, merge_packed, wand_search,
+    SHARD_DIR, PackedIndex, compact_if, merge_packed, packed_shard_row,
+    wand_search,
 )
 from fusion_spark.indexing import _finalize, build_index  # noqa: E402
 from fusion_spark.session import get_spark  # noqa: E402
+from fusion_spark.shards import build  # noqa: E402
 
 
 def main() -> None:
@@ -79,19 +81,25 @@ def main() -> None:
     mono = PackedIndex.read(spark, f"{out_dir}/mono")
 
     # one pack job per shard — the per-ingest-job shape; shards live under
-    # one store root in the pack_index_resumable shard=* layout so the
-    # compact_if quiesce hook can evaluate the same store below
+    # one store root in the packed sharded-store layout, each committed to
+    # the store's manifest, so the compact_if quiesce hook (which reads the
+    # shard set from the manifest) can evaluate the same store below
     t0 = time.perf_counter()
-    shard_paths = []
-    for i in range(n_shards):
+    shard_paths = [os.path.join(out_dir, "store", SHARD_DIR.format(i))
+                   for i in range(n_shards)]
+
+    def write(i: int) -> dict:
         lo, hi = i * seg, (i + 1) * seg
         si = _finalize(
             disk_idx.postings.filter(f"doc_id >= {lo} and doc_id < {hi}"),
             spark.read.parquet(f"{out_dir}/docstats")
             .filter(f"doc_id >= {lo} and doc_id < {hi}"), "bm25")
-        p = f"{out_dir}/store/shard={i:03d}"
-        PackedIndex.from_index(si, segment_size=seg, num_partitions=4).write(p)
-        shard_paths.append(p)
+        PackedIndex.from_index(si, segment_size=seg,
+                               num_partitions=4).write(shard_paths[i])
+        return packed_shard_row(spark, shard_paths[i])
+
+    build(f"{out_dir}/store", {"segment_size": seg, "n_shards": n_shards},
+          range(n_shards), write, "bench_merge_fanin")
     report["pack_shards_sec"] = round(time.perf_counter() - t0, 1)
 
     t0 = time.perf_counter()
