@@ -893,6 +893,73 @@ def test_build_packed_counts_tokenless_docs(spark, tmp_path):
     assert fused.avgdl == pytest.approx(idx.avgdl)
 
 
+def test_pack_index_resumable_identity_and_skip(spark, docs_df, queries_df, tmp_path):
+    """Pack-stage resumability: the sharded resumable build is WAND-identical
+    to the monolithic pack of the same corpus (non-default k1/b), completed
+    shards are skipped on restart (mtimes untouched), the lineage table has
+    one row per shard in shard order accounting every posting, a dead run
+    (a shard missing from the manifest) redoes only that shard, and a
+    resume with different knobs is rejected via the manifest's plan line."""
+    import json
+    import os
+    import shutil
+    import time
+
+    from fusion_spark.blocks import build_packed_resumable
+    from fusion_spark.shards import lineage
+
+    def run(n_shards=3):
+        return build_packed_resumable(
+            spark, docs_df, store, n_shards=n_shards, text_col="content",
+            segment_size=16,
+        )
+
+    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    store = str(tmp_path / "rstore")
+    merged = run()
+    mono = PackedIndex.from_index(idx, segment_size=16)
+
+    def topk(p):
+        return sorted(
+            (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in wand_search(p, queries_df, k=5, k1=2.5, b=0.2).collect()
+        )
+
+    assert topk(merged) == topk(mono)
+    assert merged.n_docs == mono.n_docs
+
+    lin = lineage(spark, store).collect()
+    assert [r["shard"] for r in lin] == sorted(r["shard"] for r in lin)
+    assert sum(r["n_postings"] for r in lin) == idx.postings.count()
+
+    # restart: every shard complete -> no shard store is rewritten
+    shard_dirs = sorted(
+        os.path.join(store, d) for d in os.listdir(store) if d.startswith("shard=")
+    )
+    assert len(shard_dirs) == len(lin) >= 2
+    mtimes = {d: os.path.getmtime(os.path.join(d, "meta.json")) for d in shard_dirs}
+    time.sleep(0.05)
+    assert topk(run()) == topk(mono)
+    for d, m in mtimes.items():
+        assert os.path.getmtime(os.path.join(d, "meta.json")) == m
+
+    # a dead run = some shards missing from the manifest: drop the last
+    # shard's lineage row and its store; resume must redo ONLY that shard
+    manifest = os.path.join(store, "_manifest.jsonl")
+    lines = [ln for ln in open(manifest).read().splitlines() if ln.strip()]
+    keep = [ln for ln in lines if json.loads(ln).get("shard") != lin[-1]["shard"]]
+    with open(manifest, "w") as f:
+        f.write("\n".join(keep) + "\n")
+    shutil.rmtree(shard_dirs[-1])
+    assert topk(run()) == topk(mono)
+    for d, m in list(mtimes.items())[:-1]:
+        assert os.path.getmtime(os.path.join(d, "meta.json")) == m
+
+    # layout drift is rejected, not silently mixed
+    with pytest.raises(ValueError, match="DIFFERENT shard layout"):
+        run(n_shards=4)
+
+
 def test_build_packed_resumable_identity_skip_and_plan_guard(
     spark, docs_df, queries_df, tmp_path
 ):
@@ -902,7 +969,6 @@ def test_build_packed_resumable_identity_skip_and_plan_guard(
     import os
 
     from fusion_spark.blocks import build_packed, build_packed_resumable
-    from fusion_spark.shards import lineage
 
     store = str(tmp_path / "fusedshards")
     merged = build_packed_resumable(
@@ -917,13 +983,6 @@ def test_build_packed_resumable_identity_skip_and_plan_guard(
     assert a == b
     assert merged.n_docs == mono.n_docs
     assert merged.avgdl == pytest.approx(mono.avgdl)
-
-    # lineage: one row per shard, in shard order, accounting every posting
-    lin = lineage(spark, store).collect()
-    assert len(lin) >= 2
-    assert [r["shard"] for r in lin] == sorted(r["shard"] for r in lin)
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    assert sum(r["n_postings"] for r in lin) == idx.postings.count()
 
     # skip-on-restart: no shard store file is rewritten
     mtimes = {}
