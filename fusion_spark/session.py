@@ -1,9 +1,24 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for the sandbox (local[N], 128 GiB single JVM) but expressed
-so the same config works on a real multi-executor cluster: AQE on (runtime
-re-planning + skew-join splitting), Arrow on (vectorized pandas UDF
-transfer), modest shuffle partitions for small SFs (override per workload).
+Defaults are expressed so the same config works in local[N] and on a real
+multi-executor cluster: AQE on (runtime re-planning + skew-join splitting),
+Arrow on (vectorized pandas UDF transfer), modest shuffle partitions for
+small SFs (override per workload).
+
+Host fit: ``spark.driver.memory`` defaults to 75% of physical RAM, capped at
+16g (``SPARK_DRIVER_MEMORY`` overrides it).
+
+Python workers run under ``fusion_spark.worker_daemon``
+(``spark.python.daemon.module``). The stock ``pyspark.daemon`` lets every
+task re-read the central directory of the Spark core jar and ``pyspark.zip``
+in ``setup_spark_files`` (~120-160 ms per task, BENCH.md "Fixed cost of a
+Python task"); the fusion_spark daemon re-reads an archive only when it
+changed. So that the daemon and every fusion_spark closure import from any
+working directory, the package root is prepended to
+``spark.executorEnv.PYTHONPATH`` (a caller's value is kept after it). On a
+cluster whose executors cannot import fusion_spark at start-up (shipped only
+by ``addPyFile``), pass ``spark.python.daemon.module=pyspark.daemon`` in
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -11,6 +26,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# parent of the fusion_spark/ package: what a worker needs on its path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_memory() -> str:
+    """75% of physical RAM in MiB, never above the old fixed 16g."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 * 1024, int(total * 0.75) >> 20)}m"
 
 
 def get_spark(
@@ -54,9 +81,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "fusion_spark.worker_daemon")
     )
     # Opt-in event logging (tools/audit_event_log.py consumes these): the
     # executed plan — AQE-coalesced reads, real task counts — only exists in
@@ -81,6 +112,10 @@ def get_spark(
         import json as _json
 
         merged.update(_json.loads(env_conf))
+    pythonpath = merged.get("spark.executorEnv.PYTHONPATH")
+    merged["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [_PACKAGE_ROOT] + ([pythonpath] if pythonpath else [])
+    )
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -68,6 +68,7 @@ def worker_twophase(docs_dir: str, out: str) -> None:
         )
         print(json.dumps({
             "leg": "twophase", "phases": T,
+            "driver_memory": spark.conf.get("spark.driver.memory"),
             "total_sec": round(sum(T.values()), 1),
             "segment_size": seg, "num_partitions": parts,
             "postings_parquet_bytes": postings_bytes,
@@ -97,6 +98,7 @@ def worker_fused(docs_dir: str, out: str, cores: int = 32) -> None:
     )
     print(json.dumps({
         "leg": "fused", "cores": cores, "phases": T, "total_sec": total,
+        "driver_memory": spark.conf.get("spark.driver.memory"),
         "segment_size": packed.segment_size, "n_postings": n_post,
     }))
     spark.stop()
@@ -231,16 +233,14 @@ def main() -> None:
         with open(os.path.join(docs_dir, "_params.json"), "w") as f:
             json.dump(params, f)
 
-    report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl, "cores": 32,
-                    "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY",
-                                                    "16g")}
+    report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl, "cores": 32}
     stores = {}
     try:
         for leg in ("twophase", "fused"):
             out = tempfile.mkdtemp(prefix=f"fusedab_{leg}_")
             stores[leg] = out
             rec = _run([f"--worker-{leg}", docs_dir, out])
-            report[leg] = {k: rec[k] for k in ("phases", "total_sec")}
+            report[leg] = {k: rec[k] for k in ("phases", "total_sec", "driver_memory")}
             if leg == "twophase":
                 report["postings_parquet_bytes"] = rec["postings_parquet_bytes"]
             report[f"{leg}_segment_size"] = rec["segment_size"]

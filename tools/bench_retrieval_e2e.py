@@ -206,7 +206,7 @@ def main():
 
     report = {
         "n_docs": n_docs, "vocab": vocab, "dl": dl,
-        "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "driver_memory": spark.conf.get("spark.driver.memory"),
         # postings count from the store's own block metadata (no postings pass)
         "n_postings": store.blocks.agg(F.sum("n_docs")).collect()[0][0],
         "segment_size": store.segment_size,

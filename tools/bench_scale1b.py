@@ -63,7 +63,7 @@ def main():
 
     spark = get_spark(app_name="bench-scale1b", cores=32, shuffle_partitions=256)
     report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl,
-                    "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+                    "driver_memory": spark.conf.get("spark.driver.memory"),
                     "phases": {}}
     T: dict[str, float] = {}
 
