@@ -8,9 +8,9 @@ foreachBatch). Because tf/dl are per-doc facts, appends never rewrite old
 data; global stats (df/idf/avgdl) are recomputed lazily at query time from
 the posting-store union — identical semantics to a full rebuild.
 
-`trigger(availableNow=True)` drains the backlog and stops — used by tests
-and by backfill jobs; a live deployment runs the same query continuously
-with a processingTime trigger + checkpointLocation for exactly-once appends.
+Every query here runs `trigger(availableNow=True)`: it drains the backlog
+and stops — what tests and backfill jobs need. A live deployment runs the
+same plan under a processingTime trigger and stops the query itself.
 """
 
 from __future__ import annotations
@@ -30,10 +30,9 @@ def incremental_index_stream(
     checkpoint_dir: str,
     schema: str = "doc_id long, text string",
     mode: str = "simple",
-    available_now: bool = True,
 ):
-    """Start (and with available_now=True, run to completion) the incremental
-    posting-store maintenance stream. Returns the StreamingQuery."""
+    """Run the incremental posting-store maintenance stream to completion
+    (availableNow). Returns the finished StreamingQuery."""
     stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -45,15 +44,14 @@ def incremental_index_stream(
         # docstats kept separately — token-less docs still count toward N/avgdl
         toks.select("doc_id", "dl").write.mode("append").parquet(f"{store_dir}/docstats")
 
-    writer = (
+    q = (
         stream.writeStream.foreachBatch(append_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q.awaitTermination()
+    return q
 
 
 def incremental_packed_stream(
@@ -284,150 +282,33 @@ def sessionize_stream(
     schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
 ):
     """Custom STATEFUL streaming operator via applyInPandasWithState with
-    WATERMARK-DRIVEN session closing (GroupStateTimeout.EventTimeTimeout):
-    per user_id a LIST of open sessions lives in the state store; a session
-    is emitted only when the event-time watermark passes session_end + gap —
-    i.e. when no admissible event can still extend it. The per-batch kernel
-    is numpy-vectorized (gap boundaries via diff); merging the batch's
-    segments with the handful of open state sessions is tiny-list Python.
+    WATERMARK-DRIVEN session closing (GroupStateTimeout.EventTimeTimeout): a
+    session is emitted only when the event-time watermark passes
+    session_end + gap — i.e. when no admissible event can still extend it.
 
-    Robustness contract (replaces the r2 cross-batch ordering contract):
-    events may arrive OUT OF EVENT-TIME ORDER across micro-batches up to
-    `lateness` — Spark drops rows older than the watermark, and anything
-    younger merges correctly because open sessions close only via the
-    watermark, never by seeing a later event. Idle users cannot pin state
-    forever: the registered event-time timeout fires once the global
-    watermark passes their earliest open session's end + gap, even if that
-    user never produces another event. On a bounded backlog the watermark
+    The state key is a BUCKET, `pmod(hash(user_id), n)` with n the session's
+    `spark.sql.shuffle.partitions`, not the user: one state row (one Python
+    call + one Arrow round-trip per micro-batch) carries the open sessions of
+    all its users, so applyInPandasWithState's fixed per-group cost is paid
+    about once per stateful partition rather than once per user. The kernel
+    is vectorized ACROSS the bucket's users: one sort, one numpy
+    boundary/reduceat pass for session segments, one pandas interval-merge
+    (per-user cummax) against the open-session table carried in state. The
+    event-time timeout fires per bucket (earliest open session across its
+    users).
+
+    Robustness contract: events may arrive OUT OF EVENT-TIME ORDER across
+    micro-batches up to `lateness` — Spark drops rows older than the
+    watermark, and anything younger merges correctly because open sessions
+    close only via the watermark, never by seeing a later event. Idle users
+    cannot pin state forever: the timeout fires once the global watermark
+    passes the bucket's earliest open session end + gap, even if no user of
+    the bucket produces another event. On a bounded backlog the watermark
     only advances with micro-batches, so a backfill drive appends heartbeat
     files whose event time exceeds max(end) + gap + lateness (any user —
     the watermark is global); a live stream gets this for free.
     Returns the collected closed sessions as a batch DataFrame (memory sink,
-    availableNow)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long, sum_value double"
-    )
-    state_schema = (
-        "starts array<long>, ends array<long>, ns array<long>, ss array<double>"
-    )
-
-    def _merge(sessions: list[tuple]) -> list[tuple]:
-        """Gap-merge a (start, end, n, sum) list: overlapping-or-within-gap
-        neighbors coalesce. Counts/sums are order-invariant, so late events
-        merging into the middle of an open session stay exact."""
-        sessions.sort()
-        out: list[tuple] = []
-        for s in sessions:
-            if out and s[0] - out[-1][1] <= gap_us:
-                p = out[-1]
-                out[-1] = (p[0], max(p[1], s[1]), p[2] + s[2], p[3] + s[3])
-            else:
-                out.append(s)
-        return out
-
-    def fn(key, pdfs, state: GroupState):
-        user_id = key[0]
-        sessions: list[tuple] = []
-        if state.exists:
-            starts, ends, ns, ss = state.get
-            sessions = list(zip(starts, ends, ns, ss))
-        if not state.hasTimedOut:
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if len(batch):
-                batch = batch.sort_values(["ts", "event_id"])
-                t = batch["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-                v = batch["value"].to_numpy(dtype=np.float64)
-                b0 = np.concatenate(([0], np.flatnonzero(np.diff(t) > gap_us) + 1))
-                b1 = np.concatenate((b0[1:], [t.size]))
-                sessions.extend(
-                    (int(t[a]), int(t[b - 1]), int(b - a), float(np.add.reduce(v[a:b])))
-                    for a, b in zip(b0, b1)
-                )
-                sessions = _merge(sessions)
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        closed = [s for s in sessions if s[1] + gap_us < wm_us]
-        open_ = [s for s in sessions if s[1] + gap_us >= wm_us]
-        if open_:
-            state.update(
-                (
-                    [s[0] for s in open_],
-                    [s[1] for s in open_],
-                    [s[2] for s in open_],
-                    [s[3] for s in open_],
-                )
-            )
-            # wake when the watermark can close the EARLIEST open session;
-            # must be strictly beyond the current watermark
-            to_ms = (min(s[1] for s in open_) + gap_us) // 1000 + 1
-            state.setTimeoutTimestamp(max(to_ms, wm_ms + 1))
-        else:
-            state.remove()
-        if closed:
-            closed.sort()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": pd.to_datetime([c[0] for c in closed], unit="us"),
-                    "session_end": pd.to_datetime([c[1] for c in closed], unit="us"),
-                    "n_events": [c[2] for c in closed],
-                    "sum_value": [c[3] for c in closed],
-                }
-            )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .withWatermark("ts", lateness)
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-    _MEMSINK_COUNTER[0] += 1
-    name = f"sessions_{_MEMSINK_COUNTER[0]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def sessionize_stream_bucketed(
-    spark: SparkSession,
-    landing_dir: str,
-    checkpoint_dir: str,
-    gap_us: int = _SESSION_GAP_US_DEFAULT,
-    lateness: str = "1 hour",
-    n_buckets: int = 512,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-):
-    """`sessionize_stream` with COARSE state partitioning: the stateful group
-    key is `pmod(hash(user_id), n_buckets)` instead of user_id, so one state
-    row (and one Python call + one Arrow round-trip per micro-batch) serves
-    MANY users. The per-user variant pays applyInPandasWithState's per-group
-    overhead once per user per micro-batch — at 50k users that fixed cost,
-    not the kernel, is the throughput floor (BENCH.md r4: 16.8k events/s).
-    Here the kernel is vectorized ACROSS users: one sort, one numpy
-    boundary/reduceat pass for session segments, one pandas interval-merge
-    (per-user cummax) against the open-session table carried in state.
-
-    Semantics are identical to sessionize_stream (same closed-session rows);
-    the trade is state-row granularity: a bucket's open sessions live in one
-    state value, so state reads/writes move ~users_per_bucket entries per
-    micro-batch, and the event-time timeout fires per bucket (earliest open
-    session across the bucket's users). n_buckets tunes the trade: more
-    buckets → less state movement per row, more per-group overhead."""
+    availableNow). `sessionize` is the batch twin: same closed-session rows."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -520,18 +401,23 @@ def sessionize_stream_bucketed(
                 }
             )
 
+    # The bucket count is part of the state key, so it is only safe to read
+    # from the live conf because a run never resumes a checkpoint: the
+    # append-mode memory sink refuses recovery (AnalysisException). If the
+    # sink ever becomes recoverable, n must come from the checkpoint instead.
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing_dir)
         .withWatermark("ts", lateness)
-        .withColumn("bucket", F.pmod(F.hash("user_id"), F.lit(n_buckets)))
+        .withColumn("bucket", F.pmod(F.hash("user_id"), F.lit(n)))
     )
     sessions = stream.groupBy("bucket").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
     _MEMSINK_COUNTER[0] += 1
-    name = f"sessions_bkt_{_MEMSINK_COUNTER[0]}"
+    name = f"sessions_{_MEMSINK_COUNTER[0]}"
     q = (
         sessions.writeStream.format("memory")
         .queryName(name)
@@ -542,223 +428,6 @@ def sessionize_stream_bucketed(
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-def _route_pin_path(checkpoint_dir: str) -> str:
-    return checkpoint_dir.rstrip("/") + "/_fusion_route.json"
-
-
-def _read_route_pin(spark: SparkSession, checkpoint_dir: str) -> dict | None:
-    """Read + validate the route marker written by a previous
-    sessionize_stream_auto run against this checkpoint dir (Hadoop FS —
-    works for any URI scheme the checkpoint itself works for). None when
-    absent. Corrupt or structurally-invalid pins raise a ValueError naming
-    the file and the remedy rather than an opaque JSONDecodeError/TypeError
-    deep inside route dispatch. Bytes are read straight off the
-    FSDataInputStream (InputStream.readAllBytes, Java ≥9) — no dependency
-    on commons-io, which shaded/alternate Hadoop classpaths may not ship."""
-    jvm = spark._jvm
-    pin_file = _route_pin_path(checkpoint_dir)
-    path = jvm.org.apache.hadoop.fs.Path(pin_file)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return None
-    import json
-
-    stream = fs.open(path)
-    try:
-        data = bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
-    try:
-        pin = json.loads(data)
-    except json.JSONDecodeError as e:
-        raise ValueError(
-            f"route pin {pin_file} is unreadable ({e}). It pins the stateful "
-            "grouping key for this checkpoint; if the checkpoint has no "
-            "committed batches yet, delete the pin (or use a fresh "
-            "checkpoint dir) and rerun."
-        ) from e
-    route = pin.get("route") if isinstance(pin, dict) else None
-    if route not in ("per_user", "bucketed"):
-        raise ValueError(
-            f"route pin {pin_file} has invalid route={route!r} "
-            "(expected 'per_user' or 'bucketed'); delete the pin or use a "
-            "fresh checkpoint dir."
-        )
-    if route == "bucketed" and not isinstance(pin.get("n_buckets"), int):
-        raise ValueError(
-            f"route pin {pin_file} pins the bucketed route but carries no "
-            f"integer n_buckets (got {pin.get('n_buckets')!r}); the bucketed "
-            "state key is user_id % n_buckets, so the original value is "
-            "required. Delete the pin or use a fresh checkpoint dir."
-        )
-    return pin
-
-
-def _write_route_pin(spark: SparkSession, checkpoint_dir: str, pin: dict) -> None:
-    """Atomically (write-temp-then-rename) persist the route pin: a crash or
-    concurrent reader mid-write must never observe a truncated JSON file."""
-    import json
-
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(_route_pin_path(checkpoint_dir))
-    tmp = jvm.org.apache.hadoop.fs.Path(_route_pin_path(checkpoint_dir) + ".tmp")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(pin).encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(path):
-        fs.delete(path, False)
-    fs.rename(tmp, path)
-
-
-def _checkpoint_has_commits(spark: SparkSession, checkpoint_dir: str) -> bool:
-    """True iff the streaming checkpoint has at least one COMMITTED batch
-    (a file under <checkpoint>/commits). A pin written by a run that died
-    before its first commit pins a route chosen from possibly-bad data while
-    the state store is still empty — such a pin is safe (and right) to
-    re-decide, so the pin is only honored once a batch has committed."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir.rstrip("/") + "/commits")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return False
-    for status in fs.listStatus(path):
-        if not status.getPath().getName().startswith("."):
-            return True
-    return False
-
-
-# Distinct-user count above which the bucketed sessionizer wins: below it,
-# per-user state rows are few enough that applyInPandasWithState's fixed
-# per-group cost is noise and per-user granularity gives cheaper state
-# reads/writes and finer timeouts; above it, that fixed cost (one Python
-# call + Arrow round-trip per user per micro-batch) becomes the throughput
-# floor — measured 4.31× for the bucketed kernel at 2M events / 50k users
-# (BENCH.md r5 sessionizer experiment). The crossover sits where per-group
-# overhead (~0.2 ms) times users rivals the kernel wall per micro-batch.
-_BUCKETED_USER_CUTOVER = 2048
-
-
-def sessionize_stream_auto(
-    spark: SparkSession,
-    landing_dir: str,
-    checkpoint_dir: str,
-    gap_us: int = _SESSION_GAP_US_DEFAULT,
-    lateness: str = "1 hour",
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    n_users: int | None = None,
-    user_cutover: int = _BUCKETED_USER_CUTOVER,
-    route_out: dict | None = None,
-):
-    """One sessionization entry point that picks the state-granularity
-    variant for the caller (r5 verdict #3 — the 4.31× trade should not
-    require knowing it exists):
-
-    * distinct users ≤ `user_cutover` → `sessionize_stream` (state row per
-      user: minimal state movement per micro-batch, per-user timeouts);
-    * above it → `sessionize_stream_bucketed` with
-      ``n_buckets = clamp(n_users // 100, 64, 4096)`` — ~100 users per
-      state row keeps the vectorized kernel's batches fat while bounding
-      how much open-session state one bucket row drags through each
-      read/write.
-
-    `n_users` is the caller's cardinality estimate (pass it for live
-    streams); when omitted it is estimated with one cheap batch
-    `approx_count_distinct` scan over the landing dir's CURRENT contents —
-    sound for the availableNow backfill drives this module targets, an
-    undercount for a landing dir that keeps growing (pass `n_users` then).
-    Only a MISSING landing dir (AnalysisException on read) downgrades to the
-    cheapest route; any other read error (corrupt files, permissions)
-    propagates here rather than resurfacing obscured inside the stream.
-
-    The chosen route (and n_buckets) is PINNED in `checkpoint_dir`
-    (`_fusion_route.json`): the two variants keep incompatible state (the
-    stateful grouping key is user_id vs user_id % n_buckets), so a restart
-    against an existing checkpoint must replay the original route even if
-    the cardinality estimate — or an explicit `n_users` — has since crossed
-    `user_cutover`. To change route, use a fresh checkpoint dir. A pin is
-    only honored once the checkpoint has a COMMITTED batch: a pin left by a
-    run that died before its first commit (state store still empty) is
-    re-decided from current data and overwritten.
-
-    Both routes emit identical closed-session rows (stream==batch tests
-    cover the dispatcher on each side of the cutover); `route_out` (a dict)
-    receives {route, n_users, n_buckets, pinned} for observability."""
-    from pyspark.errors import AnalysisException
-
-    # Staleness FIRST, read second (r9 ADVICE): when the checkpoint has no
-    # committed batch, ANY pin is pre-commit insurance with an empty state
-    # store behind it — including one truncated by a crash mid-write, the
-    # precise scenario the atomic writer guards against. Reading such a pin
-    # before the staleness check would hard-fail on the corruption and
-    # demand a manual delete even though the no-commits path safely
-    # re-decides and overwrites it. Only a COMMITTED checkpoint's pin is
-    # load-bearing, so only there does a corrupt pin raise.
-    if _checkpoint_has_commits(spark, checkpoint_dir):
-        pin = _read_route_pin(spark, checkpoint_dir)
-    else:
-        # state store is empty → no state/key incompatibility exists yet;
-        # re-decide from current data and let the decision below overwrite
-        # whatever pin (valid, corrupt, or absent) is on disk
-        pin = None
-    if pin is not None:
-        if route_out is not None:
-            route_out.update(
-                {"route": pin["route"], "n_users": pin.get("n_users"),
-                 "n_buckets": pin.get("n_buckets"), "pinned": True}
-            )
-        if pin["route"] == "bucketed":
-            return sessionize_stream_bucketed(
-                spark, landing_dir, checkpoint_dir, gap_us=gap_us,
-                lateness=lateness, n_buckets=int(pin["n_buckets"]), schema=schema,
-            )
-        return sessionize_stream(
-            spark, landing_dir, checkpoint_dir, gap_us=gap_us,
-            lateness=lateness, schema=schema,
-        )
-
-    if n_users is None:
-        try:
-            n_users = (
-                spark.read.schema(schema)
-                .parquet(landing_dir)
-                .agg(F.approx_count_distinct("user_id"))
-                .collect()[0][0]
-            )
-        except AnalysisException:  # landing dir not created yet → cheapest route
-            n_users = 0
-    if n_users > user_cutover:
-        n_buckets = min(max(int(n_users) // 100, 64), 4096)
-        _write_route_pin(
-            spark, checkpoint_dir,
-            {"route": "bucketed", "n_users": int(n_users), "n_buckets": n_buckets},
-        )
-        if route_out is not None:
-            route_out.update(
-                {"route": "bucketed", "n_users": int(n_users),
-                 "n_buckets": n_buckets, "pinned": False}
-            )
-        return sessionize_stream_bucketed(
-            spark, landing_dir, checkpoint_dir, gap_us=gap_us,
-            lateness=lateness, n_buckets=n_buckets, schema=schema,
-        )
-    _write_route_pin(
-        spark, checkpoint_dir,
-        {"route": "per_user", "n_users": int(n_users), "n_buckets": None},
-    )
-    if route_out is not None:
-        route_out.update(
-            {"route": "per_user", "n_users": int(n_users),
-             "n_buckets": None, "pinned": False}
-        )
-    return sessionize_stream(
-        spark, landing_dir, checkpoint_dir, gap_us=gap_us,
-        lateness=lateness, schema=schema,
-    )
 
 
 def dedup_stream(

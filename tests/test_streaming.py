@@ -1,6 +1,8 @@
 """Incremental posting-store stream: arrivals in two waves produce an index
 identical to a one-shot batch build over the union."""
 
+import contextlib
+
 import pytest
 
 from fusion_spark.indexing import build_index
@@ -298,22 +300,44 @@ def test_dedup_stream_first_arrival_wins(spark, tmp_path):
     assert got == want == {1, 2, 4}
 
 
-def test_sessionize_stream_bucketed_equals_batch(spark, tmp_path):
-    """The coarse-state sessionizer (state key = hash(user_id) % n_buckets,
-    kernel vectorized across a bucket's users — r4 verdict #4) must emit the
-    SAME closed sessions as the batch twin, including cross-batch late-event
-    merging. n_buckets=3 forces many users per state row."""
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    """sessionize_stream keys its state on pmod(hash(user_id), n) with n read
+    from spark.sql.shuffle.partitions; a small n packs several users into
+    one state bucket."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _buckets(spark, users, n):
+    """{user_id: state bucket} under sessionize_stream's key at n buckets."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(u,) for u in users], "user_id long")
+    return dict(df.select("user_id", F.pmod(F.hash("user_id"), F.lit(n))).collect())
+
+
+def test_sessionize_stream_shared_buckets_equals_batch(spark, tmp_path):
+    """Many users per state bucket (3 buckets; the kernel is vectorized
+    across a bucket's users) must emit the SAME closed sessions as the batch
+    twin, with one global heartbeat closing every bucket."""
     import datetime
     import glob
     import shutil
 
     from pyspark.sql import functions as F
 
-    from fusion_spark.streaming import sessionize, sessionize_stream_bucketed
+    from fusion_spark.streaming import sessionize, sessionize_stream
 
     events_path = "/root/testdata/sf0.001/events.parquet"
     events = spark.read.parquet(events_path)
     max_ts = events.agg(F.max("ts")).collect()[0][0]
+    users = [r["user_id"] for r in events.select("user_id").distinct().collect()]
+    assert len(users) > len(set(_buckets(spark, users, 3).values()))
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -329,9 +353,8 @@ def test_sessionize_stream_bucketed_equals_batch(spark, tmp_path):
     hb.coalesce(1).write.parquet(str(d))
     shutil.copy(glob.glob(str(d / "part-*.parquet"))[0], landing / "z_hb.parquet")
 
-    out = sessionize_stream_bucketed(
-        spark, str(landing), str(tmp_path / "ckpt"), n_buckets=3
-    )
+    with _shuffle_partitions(spark, 3):
+        out = sessionize_stream(spark, str(landing), str(tmp_path / "ckpt"))
     got = sorted(
         (
             r["user_id"],
@@ -350,15 +373,18 @@ def test_sessionize_stream_bucketed_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_sessionize_stream_bucketed_late_event(spark, tmp_path):
-    """Late-but-within-watermark events must merge into the right session in
-    the bucketed kernel's interval-merge (state carries the open session the
-    late event lands inside)."""
+def test_sessionize_stream_late_event_shared_bucket(spark, tmp_path):
+    """A late-but-within-watermark event must merge into the right session
+    when its user shares a state bucket with another user (2 buckets, users
+    7 and 9 collide): the interval-merge carries both users' open sessions."""
     import datetime
     import glob
     import shutil
 
-    from fusion_spark.streaming import sessionize, sessionize_stream_bucketed
+    from fusion_spark.streaming import sessionize, sessionize_stream
+
+    buckets = _buckets(spark, [7, 9], 2)
+    assert buckets[7] == buckets[9]
 
     t0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
 
@@ -368,8 +394,8 @@ def test_sessionize_stream_bucketed_late_event(spark, tmp_path):
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     gap_us = 10 * 60 * 1_000_000
     files = [
-        [mk(1, 0), mk(2, 5), mk(10, 1, u=8)],
-        [mk(3, 2, v=10.0), mk(4, 31), mk(11, 3, u=8)],
+        [mk(1, 0), mk(2, 5), mk(10, 1, u=9)],
+        [mk(3, 2, v=10.0), mk(4, 31), mk(11, 3, u=9)],
         [mk(90, 24 * 60, u=99)],
         [mk(91, 48 * 60, u=99)],
     ]
@@ -380,15 +406,16 @@ def test_sessionize_stream_bucketed_late_event(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d))
         shutil.copy(glob.glob(str(d / "part-*.parquet"))[0], landing / f"{i:02d}.parquet")
 
-    out = sessionize_stream_bucketed(
-        spark, str(landing), str(tmp_path / "ckpt"), gap_us=gap_us,
-        lateness="1 hour", n_buckets=2,
-    )
+    with _shuffle_partitions(spark, 2):
+        out = sessionize_stream(
+            spark, str(landing), str(tmp_path / "ckpt"), gap_us=gap_us,
+            lateness="1 hour",
+        )
     got = sorted(
         (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"], r["sum_value"])
-        for r in out.filter("user_id in (7, 8)").collect()
+        for r in out.filter("user_id in (7, 9)").collect()
     )
-    batch = spark.createDataFrame([e for f in files for e in f if e[2] in (7, 8)], schema)
+    batch = spark.createDataFrame([e for f in files for e in f if e[2] in (7, 9)], schema)
     want = sorted(
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"], r["sum_value"])
         for r in sessionize(batch, gap_us=gap_us).collect()
@@ -398,18 +425,21 @@ def test_sessionize_stream_bucketed_late_event(spark, tmp_path):
     assert (7, 3) in by_user  # late 10:02 merged into the first session
 
 
-def test_sessionize_stream_bucketed_random_parity(spark, tmp_path):
-    """Seeded-random stress for the bucketed kernel's cross-user vectorized
-    merge: 300 events, 15 users, irregular gaps straddling the session gap,
-    sliced into 4 contiguous-time files with shuffled row order inside each
-    (arrival order within a micro-batch is irrelevant; contiguous slices
-    keep every event inside the watermark). Must equal the batch twin."""
+def test_sessionize_stream_random_parity(spark, tmp_path):
+    """Seeded-random stress for the kernel's cross-user vectorized merge:
+    300 events, 15 users in 4 state buckets, irregular gaps straddling the
+    session gap, sliced into 4 contiguous-time files with shuffled row order
+    inside each (arrival order within a micro-batch is irrelevant;
+    contiguous slices keep every event inside the watermark). Must equal
+    the batch twin."""
     import glob
     import random
     import shutil
     from datetime import datetime, timedelta
 
-    from fusion_spark.streaming import sessionize, sessionize_stream_bucketed
+    from fusion_spark.streaming import sessionize, sessionize_stream
+
+    assert len(set(_buckets(spark, range(15), 4).values())) < 15
 
     rng = random.Random(20260817)
     t0 = datetime(2026, 2, 1, 0, 0, 0)
@@ -438,9 +468,10 @@ def test_sessionize_stream_bucketed_random_parity(spark, tmp_path):
     spark.createDataFrame(hb, schema).coalesce(1).write.parquet(str(d))
     shutil.copy(glob.glob(str(d / "part-*.parquet"))[0], landing / "zz.parquet")
 
-    out = sessionize_stream_bucketed(
-        spark, str(landing), str(tmp_path / "ckpt"), gap_us=gap_us, n_buckets=4
-    )
+    with _shuffle_partitions(spark, 4):
+        out = sessionize_stream(
+            spark, str(landing), str(tmp_path / "ckpt"), gap_us=gap_us
+        )
     max_real = max(r[1] for r in rows)
     got = sorted(
         (r["user_id"], str(r["session_start"]), str(r["session_end"]),
@@ -457,225 +488,24 @@ def test_sessionize_stream_bucketed_random_parity(spark, tmp_path):
     assert got == want and len(got) > 30
 
 
-def test_sessionize_stream_auto_routes_both_variants(spark, tmp_path):
-    """The dispatcher (r5 verdict #3) must pick per-user below the cutover
-    and bucketed above it — with the SAME closed sessions either way — and
-    report its routing decision through route_out."""
-    import datetime
-    import glob
+def test_sessionize_stream_rejects_used_checkpoint(spark, tmp_path):
+    """A second run on a committed checkpoint fails: the append-mode memory
+    sink refuses recovery. This is why the state bucket count may be read
+    from the live conf instead of being stored with the checkpoint."""
     import shutil
 
-    from pyspark.sql import functions as F
+    from pyspark.errors import AnalysisException
 
-    from fusion_spark.streaming import sessionize, sessionize_stream_auto
-
-    events_path = "/root/testdata/sf0.001/events.parquet"
-    events = spark.read.parquet(events_path)
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    users = [r["user_id"] for r in events.select("user_id").distinct().collect()]
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    shutil.copy(events_path, landing / "a_events.parquet")
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    # per-user sentinels close every user's open session on BOTH routes (the
-    # bucketed route only needs one global heartbeat, but per-user sentinels
-    # satisfy it too — the watermark is global)
-    sent = spark.createDataFrame(
-        [
-            (20_000_000 + i, max_ts + datetime.timedelta(days=10), u, "__sentinel__", 0.0, "")
-            for i, u in enumerate(users)
-        ],
-        schema,
-    )
-    d = tmp_path / "sentinels"
-    sent.coalesce(1).write.parquet(str(d))
-    shutil.copy(glob.glob(str(d / "part-*.parquet"))[0], landing / "z_sentinels.parquet")
-
-    want = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"],
-         round(r["sum_value"], 6))
-        for r in sessionize(events).collect()
-    )
-
-    def run(**kw):
-        route: dict = {}
-        out = sessionize_stream_auto(
-            spark, str(landing), str(tmp_path / f"ckpt_{len(list(tmp_path.iterdir()))}"),
-            route_out=route, **kw,
-        )
-        got = sorted(
-            (r["user_id"], r["session_start"].strftime("%Y-%m-%d %H:%M:%S"),
-             r["session_end"].strftime("%Y-%m-%d %H:%M:%S"), r["n_events"],
-             round(r["sum_value"], 6))
-            for r in out.collect()
-            if r["session_start"] <= max_ts
-        )
-        return got, route
-
-    # default cutover (2048) >> distinct users here → per-user route
-    got, route = run()
-    assert route["route"] == "per_user" and route["n_buckets"] is None
-    assert 0 < route["n_users"] <= 2048
-    assert got == want and len(got) > 0
-
-    # forced-low cutover → bucketed route, n_buckets clamped to the 64 floor
-    got, route = run(user_cutover=1)
-    assert route == {
-        "route": "bucketed", "n_users": route["n_users"], "n_buckets": 64,
-        "pinned": False,
-    }
-    assert got == want
-
-    # n_buckets heuristic: users//100 between the clamps
-    got, route = run(n_users=50_000)
-    assert route["route"] == "bucketed" and route["n_buckets"] == 500
-    assert got == want
-
-
-def test_sessionize_stream_auto_pins_route_on_checkpoint(spark, tmp_path):
-    """r6 advice: the two variants keep incompatible state (grouping key
-    user_id vs user_id % n_buckets), so a restart against an existing
-    checkpoint must replay the originally chosen route even when the
-    cardinality estimate — or an explicit n_users — has since crossed the
-    cutover. The route is pinned in the checkpoint dir on first run."""
-    import shutil
-
-    from fusion_spark.streaming import sessionize_stream_auto
+    from fusion_spark.streaming import sessionize_stream
 
     landing = tmp_path / "landing"
     landing.mkdir()
     shutil.copy("/root/testdata/sf0.001/events.parquet", landing / "a.parquet")
     ckpt = tmp_path / "ckpt"
 
-    route: dict = {}
-    sessionize_stream_auto(spark, str(landing), str(ckpt), route_out=route)
-    assert route["route"] == "per_user" and route["pinned"] is False
-    assert (ckpt / "_fusion_route.json").exists()
-    assert any((ckpt / "commits").iterdir())  # first run committed batches
-
-    # "restart" against the REAL checkpoint (pin + committed batches): the
-    # explicit n_users that would flip the route must lose to the pin. The
-    # routing decision happens before the stream starts; the memory-sink
-    # drive itself cannot recover a used checkpoint (Spark forbids it), so
-    # the start fails AFTER routing — which is exactly what lets us observe
-    # the honored pin in route_out.
-    route2: dict = {}
-    with pytest.raises(Exception):
-        sessionize_stream_auto(
-            spark, str(landing), str(ckpt), n_users=50_000, route_out=route2
-        )
-    assert route2["route"] == "per_user" and route2["pinned"] is True
-
-    # r8 (r7 advice): a pin WITHOUT committed batches — left by a run that
-    # died before its first commit — is stale: the state store is empty, so
-    # the router re-decides from current data and overwrites the pin.
-    ckpt_stale = tmp_path / "ckpt_stale"
-    ckpt_stale.mkdir()
-    shutil.copy(ckpt / "_fusion_route.json", ckpt_stale / "_fusion_route.json")
-    route3: dict = {}
-    sessionize_stream_auto(
-        spark, str(landing), str(ckpt_stale), n_users=50_000, route_out=route3
-    )
-    assert route3["route"] == "bucketed" and route3["pinned"] is False
-    import json as _json
-
-    refreshed = _json.loads((ckpt_stale / "_fusion_route.json").read_text())
-    assert refreshed["route"] == "bucketed"
-
-    # a fresh checkpoint is free to choose the other route
-    route4: dict = {}
-    sessionize_stream_auto(
-        spark, str(landing), str(tmp_path / "ckpt2"), n_users=50_000,
-        route_out=route4,
-    )
-    assert route4["route"] == "bucketed" and route4["pinned"] is False
-
-
-def test_sessionize_stream_auto_corrupt_precommit_pin_is_overwritten(
-    spark, tmp_path
-):
-    """r9 ADVICE: a pin truncated by a crash BEFORE the first commit — the
-    exact scenario the atomic writer is insurance for — must not hard-fail
-    and demand a manual delete. With no committed batch the state store is
-    empty, so the router never reads the corrupt bytes: it re-decides from
-    current data and overwrites the pin. The same corrupt pin WITH a
-    committed batch still raises (that pin is load-bearing)."""
-    import json as _json
-    import shutil
-
-    from fusion_spark.streaming import sessionize_stream_auto
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", landing / "a.parquet")
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    (ckpt / "_fusion_route.json").write_text('{"route": "bucke')  # truncated
-
-    route: dict = {}
-    sessionize_stream_auto(
-        spark, str(landing), str(ckpt), n_users=50_000, route_out=route
-    )
-    assert route["route"] == "bucketed" and route["pinned"] is False
-    refreshed = _json.loads((ckpt / "_fusion_route.json").read_text())
-    assert refreshed["route"] == "bucketed"
-
-    # committed checkpoint + corrupt pin = real corruption → still loud
-    ckpt2 = tmp_path / "ckpt2"
-    (ckpt2 / "commits").mkdir(parents=True)
-    (ckpt2 / "commits" / "0").write_text("v1")
-    (ckpt2 / "_fusion_route.json").write_text('{"route": "bucke')
-    with pytest.raises(ValueError, match="_fusion_route.json"):
-        sessionize_stream_auto(spark, str(landing), str(ckpt2), n_users=50_000)
-
-
-def test_route_pin_corrupt_or_invalid_raises_clearly(spark, tmp_path):
-    """r7 advice: a truncated pin (crash mid-write of the OLD non-atomic
-    writer, or a hand edit) must fail with an error naming the pin file and
-    the remedy — not an opaque JSONDecodeError/TypeError in route dispatch.
-    A committed batch marker makes the pin eligible so validation is what
-    gets exercised."""
-    from fusion_spark.streaming import _read_route_pin
-
-    ckpt = tmp_path / "ckpt"
-    (ckpt / "commits").mkdir(parents=True)
-    (ckpt / "commits" / "0").write_text("v1")
-
-    (ckpt / "_fusion_route.json").write_text('{"route": "bucke')  # truncated
-    with pytest.raises(ValueError, match="_fusion_route.json"):
-        _read_route_pin(spark, str(ckpt))
-
-    (ckpt / "_fusion_route.json").write_text('{"route": "warp"}')
-    with pytest.raises(ValueError, match="invalid route"):
-        _read_route_pin(spark, str(ckpt))
-
-    # bucketed pin missing n_buckets: the original grouping key is
-    # unrecoverable — clear error, not int(None)
-    (ckpt / "_fusion_route.json").write_text('{"route": "bucketed"}')
-    with pytest.raises(ValueError, match="n_buckets"):
-        _read_route_pin(spark, str(ckpt))
-
-    # valid pin round-trips
-    (ckpt / "_fusion_route.json").write_text(
-        '{"route": "bucketed", "n_buckets": 64}'
-    )
-    assert _read_route_pin(spark, str(ckpt))["n_buckets"] == 64
-
-
-def test_sessionize_stream_auto_corrupt_landing_raises_in_router(spark, tmp_path):
-    """r6 advice: only a MISSING landing dir may downgrade the estimate to
-    n_users=0 — a corrupt file must fail loudly in the router (route_out
-    untouched), not surface later from inside the stream with the cause
-    obscured."""
-    from fusion_spark.streaming import sessionize_stream_auto
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "x.parquet").write_bytes(b"this is not a parquet file")
-    route: dict = {}
-    with pytest.raises(Exception):
-        sessionize_stream_auto(
-            spark, str(landing), str(tmp_path / "ckpt"), route_out=route
-        )
-    assert route == {}  # failed before any routing decision
+    sessionize_stream(spark, str(landing), str(ckpt))
+    assert any((ckpt / "commits").iterdir())
+    with pytest.raises(
+        AnalysisException, match="does not support recovering from checkpoint"
+    ):
+        sessionize_stream(spark, str(landing), str(ckpt))

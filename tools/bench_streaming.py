@@ -14,7 +14,7 @@ tools/bench_curation.py.
   first-arrival semantics must emit exactly the distinct-hash count.
 
 Usage: SPARK_DRIVER_MEMORY=8g python tools/bench_streaming.py
-       [--n-events N] [--n-users U] [--n-docs M]
+       [--n-events N] [--n-users U] [--n-docs M] [--cores C]
 Prints one JSON line; paste into BENCH.md's streaming section.
 """
 
@@ -49,17 +49,10 @@ def _stage_slice(df, landing: str, name: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def bench_sessionize(spark, n_events: int, n_users: int, variant: str = "per_user",
-                     n_buckets: int = 512) -> dict:
-    """variant='per_user' drives sessionize_stream (state key = user_id);
-    variant='bucketed' drives sessionize_stream_bucketed (state key =
-    hash(user_id) % n_buckets — r4 verdict #4's coarse-state experiment).
-    Both are checked stream==batch against the same `sessionize` twin."""
-    from fusion_spark.streaming import (
-        sessionize,
-        sessionize_stream,
-        sessionize_stream_bucketed,
-    )
+def bench_sessionize(spark, n_events: int, n_users: int) -> dict:
+    """Drive sessionize_stream and check it stream==batch against the
+    `sessionize` twin on the same static files."""
+    from fusion_spark.streaming import sessionize, sessionize_stream
 
     k = (F.col("id") / n_users).cast("long")
     ts_s = k * STEP_S + (k / SESS_EVENTS).cast("long") * BLOCK_S
@@ -93,10 +86,7 @@ def bench_sessionize(spark, n_events: int, n_users: int, variant: str = "per_use
     _stage_slice(heartbeat, landing, f"part-{slices:04d}.parquet")
 
     t0 = time.time()
-    if variant == "bucketed":
-        out = sessionize_stream_bucketed(spark, landing, ckpt, n_buckets=n_buckets)
-    else:
-        out = sessionize_stream(spark, landing, ckpt)
+    out = sessionize_stream(spark, landing, ckpt)
     # sum_value rounded 6dp on both sides: the stream accumulates partial
     # sums across state merges in a different float order than the batch
     # aggregate — the repo's standard cross-engine tie contract
@@ -122,8 +112,6 @@ def bench_sessionize(spark, n_events: int, n_users: int, variant: str = "per_use
     shutil.rmtree(landing, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     return {
-        "variant": variant,
-        **({"n_buckets": n_buckets} if variant == "bucketed" else {}),
         "n_events": n_events,
         "n_users": n_users,
         "micro_batches": slices + 1,
@@ -174,35 +162,17 @@ def main() -> int:
     ap.add_argument("--n-events", type=int, default=2_000_000)
     ap.add_argument("--n-users", type=int, default=50_000)
     ap.add_argument("--n-docs", type=int, default=1_000_000)
-    ap.add_argument("--cores", type=int, default=32)
-    ap.add_argument("--experiment-buckets", type=int, default=0, metavar="N",
-                    help="run ONLY the sessionizer state-granularity experiment: "
-                         "per-user vs N-bucket coarse state on the same input")
+    ap.add_argument("--cores", type=int, default=os.cpu_count())
     args = ap.parse_args()
 
     from fusion_spark.session import get_spark
 
     spark = get_spark(app_name="streaming-bench", cores=args.cores)
-    if args.experiment_buckets:
-        per_user = bench_sessionize(spark, args.n_events, args.n_users)
-        bucketed = bench_sessionize(spark, args.n_events, args.n_users,
-                                    variant="bucketed",
-                                    n_buckets=args.experiment_buckets)
-        res = {
-            "experiment": "sessionizer_state_granularity",
-            "per_user": per_user,
-            "bucketed": bucketed,
-            "speedup": round(
-                bucketed["events_per_sec"] / per_user["events_per_sec"], 2
-            ),
-            "cores": args.cores,
-        }
-    else:
-        res = {
-            "sessionize_stream": bench_sessionize(spark, args.n_events, args.n_users),
-            "dedup_stream": bench_dedup(spark, args.n_docs, args.n_docs * 7 // 10),
-            "cores": args.cores,
-        }
+    res = {
+        "sessionize_stream": bench_sessionize(spark, args.n_events, args.n_users),
+        "dedup_stream": bench_dedup(spark, args.n_docs, args.n_docs * 7 // 10),
+        "cores": args.cores,
+    }
     print(json.dumps(res))
     spark.stop()
     return 0
