@@ -18,17 +18,21 @@ delta + varint compressed binary blocks with per-block impact bounds:
     b·min_dl/avgdl)) is a safe upper bound for ANY (k1, b) chosen at query
     time — one packed index serves the whole tuning grid (bm25.py:215-246).
 
-Query v2 (block-max WAND-style): per (query, partition of segments), sum the
+Query v2 (block-max WAND-style): per (query, group of segments), sum the
 per-term block bounds; if the bound cannot beat the current k-th best score,
 skip decoding the segment entirely. Exact scores for surviving segments are
-computed vectorized (numpy) and fed into a bounded per-partition heap; the
-≤ partitions×k heap rows per query are merged on the DRIVER (the reference's
-chunked-scan + heappushpop shape, sentence_transformers.py:334-364, with the
-scan distributed). One request is 4 Spark jobs — a bounded collect of the
-tokenized queries, one pushed-down idf read, and the segment-shuffled
-scoring pass (shuffle + collect) — or 2 when no query term is in the store;
-the result is a local relation. Skipping uses safe bounds only →
-rank/score-identical to the exact v1 join scorer (verified in tests).
+computed vectorized (numpy) and fed into a bounded heap per query; the heaps
+are merged on the DRIVER (the reference's chunked-scan + heappushpop shape,
+sentence_transformers.py:334-364). One kernel has two placements. A request
+whose query terms expose at most DRIVER_SCORE_MAX_POSTINGS postings reads
+its blocks once as Arrow and runs the kernel on the driver: 3 Spark jobs
+(tokenized queries, pushed-down idf/df read, block read), no shuffle and no
+executor Python. A larger one runs it per partition of a segment-shuffled
+scan: 4 jobs. A request with no query term in the store is 2 jobs; the
+result is a local relation. The driver holds at most
+DRIVER_SCORE_MAX_POSTINGS postings of blobs per qid chunk. Skipping uses
+safe bounds only → rank/score-identical to the exact v1 join scorer
+(verified in tests, on both placements).
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ import heapq
 import json
 import os
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -1029,6 +1033,15 @@ def compact_if(
 
 # --------------------------- block-max WAND scoring -------------------------
 
+# A qid chunk whose query terms expose at most this many postings (Σ df) is
+# scored on the driver from one Arrow read of its blocks; above it the chunk
+# takes the segment-shuffled executor pass. The value is the crossover
+# measured with tools/bench_wand_tail.py on a 99.2M-posting store, 4 cores
+# (BENCH.md, "Driver-side WAND scoring"): below it the driver won, above it
+# the two placements split.
+DRIVER_SCORE_MAX_POSTINGS = 2_000_000
+
+
 def wand_search(
     packed: PackedIndex,
     queries: DataFrame,
@@ -1043,32 +1056,41 @@ def wand_search(
     bounded heaps. Rank/score identical to scoring.search (sparse mode):
     deterministic sorted-term summation, tie-break (score DESC, doc_id ASC).
 
-    Job plan: 4 Spark jobs per request, 2 when no query term is in the store.
+    Job plan: 3 Spark jobs per request, 2 when no query term is in the store.
       1. query terms — the tokenized query frame is collected once, bounded
          by `limit(cap + 1)`; qtf is counted on the driver;
-      2. idf — one pushed-down `termstats.filter(term IN …)` collect;
-      3. score (2 jobs: segment shuffle + collect) — per qid chunk, one
-         `repartition("segment").mapInPandas` pass over the query terms'
-         blocks; its per-partition heaps are merged on the driver in
-         (score DESC, doc_id ASC) order.
+      2. idf — one pushed-down `termstats.filter(term IN …)` collect of
+         (term, df, idf); a chunk's exposure, Σ df over its matched terms,
+         is known here, before any blob is read;
+      3. per qid chunk, one of two placements of the same kernel:
+         - blocks (1 job) — exposure ≤ DRIVER_SCORE_MAX_POSTINGS: the
+           chunk's blocks are read once as Arrow (`blocks.filter(term IN
+           …).toPandas()`, no shuffle, no executor Python) and scored on
+           the driver as one batch;
+         - score (2 jobs: segment shuffle + collect) — above it: one
+           `repartition("segment").mapInPandas` pass whose per-partition
+           heaps come back to the driver.
+         Either way the heaps are merged on the driver in (score DESC,
+         doc_id ASC) order.
     The result is a local relation, so collecting it launches no job. Each
     step is labelled with a job description (`wand_search: query terms`,
-    `: idf`, `: score`); the caller's description is restored on return.
+    `: idf`, `: blocks`, `: score`); the caller's description is restored
+    on return.
 
-    Memory contract: a chunk's query-term table ships to executors via
-    closure and every partition keeps a k-slot heap PER QUERY of that chunk,
-    so per-pass EXECUTOR footprint is O(|chunk|·k) — batches larger than
-    `max_queries_per_chunk` run as consecutive qid chunks. The DRIVER holds
-    the batch's query terms, at most partitions·|chunk|·k candidate rows per
-    chunk (cut to |chunk|·k before the next chunk runs) and a result of at
-    most |queries|·k rows. To keep that bounded, a batch of more than
-    max_queries_per_chunk·max_chunks_per_plan query rows raises: dense
-    10⁵+-query offline batches belong on scoring.search / search_auto — one
-    join plan beats hundreds of chunked passes when most blocks must be
-    decoded anyway. search_auto clamps its routing bound to that product
-    (read from this signature), so batches beyond it take the join scorer
-    instead of reaching the raise. Chunking is result-invariant: queries
-    never interact."""
+    Memory contract: a chunk keeps a k-slot heap PER QUERY of that chunk
+    wherever it is scored — per shuffled partition on the executors (the
+    query-term table ships there by closure), or once on the driver. The
+    DRIVER holds the batch's query terms, at most DRIVER_SCORE_MAX_POSTINGS
+    postings of blobs per driver-scored chunk, at most partitions·|chunk|·k
+    candidate rows per shuffled chunk (cut to |chunk|·k before the next
+    chunk runs) and a result of at most |queries|·k rows. To keep that
+    bounded, a batch of more than max_queries_per_chunk·max_chunks_per_plan
+    query rows raises: dense 10⁵+-query offline batches belong on
+    scoring.search / search_auto — one join plan beats hundreds of chunked
+    passes when most blocks must be decoded anyway. search_auto clamps its
+    routing bound to that product (read from this signature), so batches
+    beyond it take the join scorer instead of reaching the raise. Chunking
+    is result-invariant: queries never interact."""
     spark = queries.sparkSession
     sc = spark.sparkContext
     caller_description = sc.getLocalProperty("spark.job.description")
@@ -1078,23 +1100,31 @@ def wand_search(
         sc.setJobDescription("wand_search: idf")
         terms = sorted({t for counts in qtf.values() for t in counts})
         # an empty IN list folds to an empty relation: no job
-        idf = {
-            r["term"]: r["idf"]
+        stats = {
+            r["term"]: (r["df"], r["idf"])
             for r in packed.termstats.filter(F.col("term").isin(terms))
-            .select("term", "idf")
+            .select("term", "df", "idf")
             .collect()
         }
-        sc.setJobDescription("wand_search: score")
-        qids_all = sorted(q for q, counts in qtf.items() if any(t in idf for t in counts))
+        qids_all = sorted(q for q, counts in qtf.items() if any(t in stats for t in counts))
         parts = []
         for i in range(0, len(qids_all), max_queries_per_chunk):
             chunk = qids_all[i : i + max_queries_per_chunk]
             by_term: dict[str, list[tuple[int, int, float]]] = {}
             for qid in chunk:
                 for term, n in qtf[qid].items():
-                    if term in idf:
-                        by_term.setdefault(term, []).append((qid, n, idf[term]))
-            cand = _wand_candidates(packed, by_term, chunk, k, k1, b).toPandas()
+                    if term in stats:
+                        by_term.setdefault(term, []).append((qid, n, stats[term][1]))
+            if sum(stats[t][0] for t in by_term) <= DRIVER_SCORE_MAX_POSTINGS:
+                sc.setJobDescription("wand_search: blocks")
+                # one batch holds every segment's rows, so each (qid, doc_id)
+                # is scored once even when the store's files split on read
+                batch = _query_blocks(packed, by_term).toPandas()
+                score = _wand_kernel(packed, by_term, chunk, k, k1, b)
+                cand = next(score(iter([batch])))
+            else:
+                sc.setJobDescription("wand_search: score")
+                cand = _wand_candidates(packed, by_term, chunk, k, k1, b).toPandas()
             parts.append(_merge_heaps(cand, k))
         return _ranked_frame(spark, parts)
     finally:
@@ -1138,9 +1168,9 @@ def _query_tf(
 
 
 def _merge_heaps(cand: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Per-partition heaps → global top-k per qid, ranked in (score DESC,
-    doc_id ASC) order — each (qid, doc_id) arrives exactly once, because a
-    segment's rows are scored in one partition."""
+    """Kernel heaps → global top-k per qid, ranked in (score DESC, doc_id
+    ASC) order — each (qid, doc_id) arrives exactly once, because a
+    segment's rows are scored in one kernel call."""
     order = np.lexsort((
         cand["doc_id"].to_numpy(), -cand["score"].to_numpy(), cand["qid"].to_numpy()
     ))
@@ -1163,18 +1193,19 @@ def _ranked_frame(spark: SparkSession, parts: list[pd.DataFrame]) -> DataFrame:
     return ranked.limit(0) if empty else ranked
 
 
-def _wand_candidates(
+def _wand_kernel(
     packed: PackedIndex,
     by_term: dict[str, list[tuple[int, int, float]]],
     qids_all: list[int],
     k: int,
     k1: float,
     b: float,
-) -> DataFrame:
-    """One bounded WAND pass for ≤ max_queries_per_chunk qids: the chunk's
-    term → [(qid, qtf, idf)] table ships to every partition by closure
-    (O(|chunk|·k) heap slots per partition); each partition emits its heaps,
-    ≤ |chunk|·k (qid, doc_id, score) rows, unranked."""
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The WAND scoring kernel for ≤ max_queries_per_chunk qids, as a
+    mapInPandas function over block batches. It keeps O(|chunk|·k) heap
+    slots and emits one frame of its heaps, ≤ |chunk|·k (qid, doc_id, score)
+    rows, unranked. Each (qid, doc_id) is scored once only if every block
+    of a segment reaches the same call — the caller's placement owes that."""
     avgdl = packed.avgdl
     variant = packed.variant
     seg_size = packed.segment_size
@@ -1284,11 +1315,29 @@ def _wand_candidates(
             {"qid": "int64", "doc_id": "int64", "score": "float64"}
         )
 
-    # Predicate pushdown: only blocks of query terms leave the store scan.
-    # `term IN (...)` reaches the parquet reader (dictionary/row-group
-    # pruning) — at corpus scale this, not block-max skipping, eliminates
-    # 99%+ of the store (a query touches tens of terms out of millions).
-    term_filter = F.col("term").isin(list(by_term.keys()))
+    return score_partition
+
+
+def _query_blocks(packed: PackedIndex, terms) -> DataFrame:
+    """Predicate pushdown: only blocks of query terms leave the store scan.
+    `term IN (...)` reaches the parquet reader (dictionary/row-group
+    pruning) — at corpus scale this, not block-max skipping, eliminates
+    99%+ of the store (a query touches tens of terms out of millions)."""
+    return packed.blocks.filter(F.col("term").isin(list(terms)))
+
+
+def _wand_candidates(
+    packed: PackedIndex,
+    by_term: dict[str, list[tuple[int, int, float]]],
+    qids_all: list[int],
+    k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The shuffled placement of the kernel: the chunk's term → [(qid, qtf,
+    idf)] table ships to every partition by closure; each partition emits
+    its heaps."""
+    score_partition = _wand_kernel(packed, by_term, qids_all, k, k1, b)
     # The repartition("segment") is a CORRECTNESS requirement, not an
     # optimization: score_partition emits each (qid, doc_id)'s score exactly
     # once only if ALL of a segment's term rows land in one partition — the
@@ -1298,7 +1347,7 @@ def _wand_candidates(
     # so every path shuffles here. Post-filter the shuffled rows are tiny
     # (only query-term blocks).
     return (
-        packed.blocks.filter(term_filter)
+        _query_blocks(packed, by_term)
         .repartition("segment")
         .mapInPandas(score_partition, schema="qid long, doc_id long, score double")
     )

@@ -6,6 +6,7 @@ from collections import defaultdict
 import numpy as np
 import pytest
 
+from fusion_spark import blocks
 from fusion_spark.blocks import (
     PackedIndex,
     VarintDecodeError,
@@ -72,17 +73,27 @@ def _collect(df):
     return got
 
 
+def _placements(monkeypatch):
+    """Force each placement of the WAND kernel in turn: a driver bound of 0
+    sends every chunk through the segment-shuffled pass, one above any
+    exposure scores every chunk on the driver."""
+    for name, bound in (("shuffled", 0), ("driver", 10**12)):
+        monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", bound)
+        yield name
+
+
 @pytest.mark.parametrize("variant,k1,b", [("bm25", 2.5, 0.2), ("bm25", 1.5, 0.75), ("tfidf", 0, 0)])
-def test_wand_identical_to_exact(spark, docs_df, queries_df, variant, k1, b):
+def test_wand_identical_to_exact(spark, docs_df, queries_df, variant, k1, b, monkeypatch):
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content", variant=variant)
     packed = PackedIndex.from_index(idx, segment_size=16)  # 64 docs → 4 segments
     exact = _collect(search(idx, queries_df, k=10, k1=k1, b=b, zero_tail=False))
-    wand = _collect(wand_search(packed, queries_df, k=10, k1=k1, b=b))
-    assert set(wand) == set(exact)
-    for qid in exact:
-        assert [d for d, _ in wand[qid]] == [d for d, _ in exact[qid]], f"qid {qid}"
-        for (_, a), (_, b_) in zip(wand[qid], exact[qid]):
-            assert a == pytest.approx(b_, abs=1e-9)
+    for placement in _placements(monkeypatch):
+        wand = _collect(wand_search(packed, queries_df, k=10, k1=k1, b=b))
+        assert set(wand) == set(exact), placement
+        for qid in exact:
+            assert [d for d, _ in wand[qid]] == [d for d, _ in exact[qid]], (placement, qid)
+            for (_, a), (_, b_) in zip(wand[qid], exact[qid]):
+                assert a == pytest.approx(b_, abs=1e-9)
 
 
 def test_packed_roundtrip_persistence(spark, docs_df, tmp_path):
@@ -183,12 +194,15 @@ def test_search_auto_planner(spark, docs_df, queries_df):
     )
 
 
-def test_disk_store_wand_correct_even_when_files_split(spark, docs_df, queries_df, tmp_path):
+def test_disk_store_wand_correct_even_when_files_split(
+    spark, docs_df, queries_df, tmp_path, monkeypatch
+):
     """Correctness guard: score_partition emits each (qid, doc_id) once only
-    if a segment's rows are co-located, and parquet files LARGER than
+    if a segment's rows reach one kernel call, and parquet files LARGER than
     spark.sql.files.maxPartitionBytes are split across input partitions on
-    read — so wand_search must repartition("segment") even for disk-backed
-    stores. Force pathological file splitting and assert identity."""
+    read — so the shuffled pass must repartition("segment") even for
+    disk-backed stores, and the driver pass must score one batch. Force
+    pathological file splitting and assert identity on both placements."""
     import contextlib
     import io
 
@@ -211,11 +225,12 @@ def test_disk_store_wand_correct_even_when_files_split(spark, docs_df, queries_d
                 "formatted"
             )
         assert "hashpartitioning(segment" in buf.getvalue()
-        a = _collect(wand_search(disk, queries_df, k=5, k1=2.5, b=0.2))
+        got = {p: _collect(wand_search(disk, queries_df, k=5, k1=2.5, b=0.2))
+               for p in _placements(monkeypatch)}
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     b = _collect(search(idx, queries_df, k=5, k1=2.5, b=0.2))
-    assert a == b
+    assert got == {"shuffled": b, "driver": b}
 
 
 def test_stream_ingest_pack_wand_lifecycle(spark, docs_df, queries_df, tmp_path):
@@ -261,10 +276,10 @@ def test_wand_identical_under_planted_hot_term(spark, queries_df):
     )
 
 
-def test_wand_chunked_identical_to_single_pass(spark, docs_df):
+def test_wand_chunked_identical_to_single_pass(spark, docs_df, monkeypatch):
     """qid chunking is result-invariant: a 40-query batch forced through
     8-qid chunks must equal the unchunked pass bit-for-bit (this is the
-    bounded-memory path for large offline batches)."""
+    bounded-memory path for large offline batches), on both placements."""
     from pyspark.sql import functions as F
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
@@ -274,9 +289,14 @@ def test_wand_chunked_identical_to_single_pass(spark, docs_df):
         [(i, " ".join(vocab[(i + j) % len(vocab)] for j in range(3))) for i in range(40)],
         "qid long, question string",
     )
-    chunked = _collect(wand_search(packed, qs, k=7, k1=2.5, b=0.2, max_queries_per_chunk=8))
-    single = _collect(wand_search(packed, qs, k=7, k1=2.5, b=0.2))
-    assert chunked == single
+    got = {}
+    for placement in _placements(monkeypatch):
+        chunked = _collect(
+            wand_search(packed, qs, k=7, k1=2.5, b=0.2, max_queries_per_chunk=8)
+        )
+        got[placement] = _collect(wand_search(packed, qs, k=7, k1=2.5, b=0.2))
+        assert chunked == got[placement], placement
+    assert got["driver"] == got["shuffled"]
 
 
 def test_search_auto_routes_big_batches_off_wand(spark, docs_df, queries_df):
@@ -596,11 +616,13 @@ def test_merge_packed_rejects_overlapping_doc_ranges(spark, docs_df, tmp_path):
     assert forced.n_docs == 2 * idx.n_docs
 
 
-def test_wand_request_job_count(spark, docs_df, tmp_path):
+def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     """The serving path's fixed cost, pinned structurally: one matched
-    request, its collect included, submits ≤ 4 Spark jobs (query terms,
-    idf, segment shuffle, score collect), a no-match request ≤ 2, and the
-    caller's job description survives."""
+    request, its collect included, submits ≤ 3 Spark jobs when scored on
+    the driver (query terms, idf, block read), ≤ 4 when forced through the
+    shuffled pass (segment shuffle + score collect in place of the block
+    read), a no-match request ≤ 2, and the caller's job description
+    survives."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
     store = PackedIndex.read(spark, str(tmp_path / "store"))
@@ -622,7 +644,10 @@ def test_wand_request_job_count(spark, docs_df, tmp_path):
         return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
     rows, jobs = run(f"{term} {term}", "wand-jobs-matched")
-    assert len(rows) > 0 and jobs <= 4
+    assert len(rows) > 0 and jobs <= 3
+    monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", 0)
+    shuffled, jobs = run(f"{term} {term}", "wand-jobs-shuffled")
+    assert shuffled == rows and jobs <= 4
     rows, jobs = run("zzzznotaterm", "wand-jobs-nomatch")
     assert rows == [] and jobs <= 2
 

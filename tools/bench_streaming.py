@@ -5,9 +5,10 @@ tools/bench_curation.py.
 
 * sessionize_stream: N events over U users land as K time-sliced parquet
   micro-batches (+ one heartbeat file that pushes the watermark past every
-  session end). Sessions are 8 events / ~70 min; blocks are 2 days apart,
-  far beyond gap+lateness, so the expected closed-session count is exactly
-  N/8. Identity: the streamed closed sessions must equal the batch
+  session end). Only whole rounds of users are staged, U·⌊N/U⌋ events;
+  sessions are 8 events / ~70 min and blocks are 2 days apart, far beyond
+  gap+lateness, so the expected closed-session count is exactly
+  U·⌈⌊N/U⌋/8⌉. Identity: the streamed closed sessions must equal the batch
   `sessionize` twin on the same static data (minus the heartbeat's own
   still-open session).
 * dedup_stream: M docs with a planted duplicate ratio land as K files;
@@ -23,6 +24,7 @@ from __future__ import annotations
 import argparse
 import glob
 import json
+import math
 import os
 import shutil
 import sys
@@ -67,6 +69,7 @@ def bench_sessionize(spark, n_events: int, n_users: int) -> dict:
     landing = tempfile.mkdtemp(prefix="sess_landing_")
     ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
     n_k = n_events // n_users            # events per user
+    staged = n_users * n_k               # whole rounds of users only
     slices = 8
     per = max(n_k // slices, 1)
     for i in range(slices):
@@ -113,12 +116,13 @@ def bench_sessionize(spark, n_events: int, n_users: int) -> dict:
     shutil.rmtree(ckpt, ignore_errors=True)
     return {
         "n_events": n_events,
+        "staged_events": staged,
         "n_users": n_users,
         "micro_batches": slices + 1,
         "closed_sessions": n_sessions,
-        "expected_sessions": n_events // SESS_EVENTS,
+        "expected_sessions": n_users * math.ceil(n_k / SESS_EVENTS),
         "wall_sec": wall,
-        "events_per_sec": round(n_events / wall),
+        "events_per_sec": round(staged / wall),
         "stream_eq_batch": identical,
     }
 

@@ -1,22 +1,30 @@
-"""Per-query WAND latency split: rare-term vs hot-term tail (r10 #4).
+"""Per-query WAND latency by df band, with each placement of the scoring
+kernel forced: the crossover instrument for
+`blocks.DRIVER_SCORE_MAX_POSTINGS`.
 
-The r9 1B proof reported only the 36-query BATCH wall (3.17 s) with 4
-hot-term queries mixed in — if hot terms dominate, the batch number hides
-a fat tail. This tool runs every query SOLO (best-of-N warm) against a
-packed store and reports the rare/hot populations separately, plus an
-overhead floor measured with a no-op query (a term absent from the vocab:
-same tokenize + census + window machinery, zero blocks decoded) so the
-per-query numbers can be read net of fixed job overhead.
+`wand_search` scores a qid chunk on the driver, from one Arrow read of its
+blocks, when the chunk's query terms expose at most that many postings
+(Σ df over the matched terms); above it the chunk takes the
+segment-shuffled executor pass. This tool runs every query SOLO (best-of-3
+warm) against one packed store, once with the bound forced to 0 (shuffled)
+and once above every exposure (driver), in alternating order, and checks
+that both placements return the same ranking.
 
-Reuses a bench_scale1b out_dir when given (docs/postings/docstats/mono
-already on disk — the 1B store builds once); otherwise generates the
-standing fixture at the requested size.
+Queries come from the store's own df bands (rare / mid / head, split as
+perfbench's `wand_serve` splits them), so every query matches; a "hot"
+ladder of the 1, 2, 4, 8, 16 and 32 highest-df terms takes the exposure to
+the store's worst case. A no-op query (no term in the store: 2 jobs, no block read)
+gives the fixed floor. The report has per-band latency and exposure for
+each placement, and a crossover table over exposure buckets.
+
+Reuses a bench_scale1b out_dir when given (postings/docstats/mono already
+on disk); otherwise generates the standing fixture at the requested size.
+Cores and shuffle partitions follow the host.
 
 Usage:
   python tools/bench_wand_tail.py [n_docs] [vocab] [dl] [out_dir] [--keep]
-Defaults: 2_000_000 200_000 50 <tmp>  (99.2M postings; pass a scale1b
-out_dir with 14_400_000 ... for the 1B reading). --keep skips cleanup so
-a later run can reuse the store.
+Defaults: 2_000_000 200_000 50 <tmp> (99.2M postings). --keep leaves the
+store for a later run.
 """
 
 from __future__ import annotations
@@ -34,9 +42,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from fusion_spark import blocks  # noqa: E402
 from fusion_spark.blocks import PackedIndex, wand_search  # noqa: E402
 from fusion_spark.indexing import _finalize, build_index  # noqa: E402
 from fusion_spark.session import get_spark  # noqa: E402
+from perfbench.data import band_queries, df_bands  # noqa: E402
+
+MIX = {"rare": 8, "mid": 8, "head": 8}
+HOT = (1, 2, 4, 8, 16, 32)  # queries of the n highest-df terms
+PLACEMENTS = {"driver": 10**18, "shuffled": 0}  # forced driver bound
+BUCKETS = (10_000, 100_000, 1_000_000, None)  # exposure upper edges
 
 
 def main():
@@ -47,8 +62,9 @@ def main():
     dl = int(args[2]) if len(args) > 2 else 50
     out_dir = args[3] if len(args) > 3 else tempfile.mkdtemp(prefix="wandtail_")
 
-    spark = get_spark(app_name="bench-wand-tail", cores=32,
-                      shuffle_partitions=64)
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-wand-tail", cores=cores,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     tok = (
         f"concat('t', cast(floor({vocab} * pow("
         "pmod(xxhash64(concat(cast(id as string), ':', cast(i as string))), 100000)"
@@ -58,7 +74,7 @@ def main():
                      for d in ("postings", "docstats"))
     if not have_build:
         docs = (
-            spark.range(0, n_docs, numPartitions=256)
+            spark.range(0, n_docs, numPartitions=max(cores * 4, 16))
             .withColumn("text", F.expr(
                 f"concat_ws(' ', transform(sequence(1, {dl}), i -> {tok}))"))
             .select(F.col("id").alias("doc_id"), "text")
@@ -66,89 +82,80 @@ def main():
         idx = build_index(docs, doc_id_col="doc_id", text_col="text")
         idx.postings.write.mode("overwrite").parquet(f"{out_dir}/postings")
         idx.docstats.write.mode("overwrite").parquet(f"{out_dir}/docstats")
-    disk_idx = _finalize(
-        spark.read.parquet(f"{out_dir}/postings"),
-        spark.read.parquet(f"{out_dir}/docstats"),
-        "bm25",
-    )
-    disk_idx.termstats.persist().count()
     if not os.path.exists(f"{out_dir}/mono/meta.json"):
+        disk_idx = _finalize(
+            spark.read.parquet(f"{out_dir}/postings"),
+            spark.read.parquet(f"{out_dir}/docstats"),
+            "bm25",
+        )
         PackedIndex.from_index(disk_idx, segment_size="auto",
                                num_partitions="auto").write(f"{out_dir}/mono")
     store = PackedIndex.read(spark, f"{out_dir}/mono")
-    store.termstats.persist().count()
+    store.termstats.persist()
+    ts = store.termstats.select("term", "df").toPandas()
+    df = {t: int(d) for t, d in zip(ts["term"], ts["df"])}
 
-    # the scale1b query mix, labeled: 32 rare-term + 4 hot-term
-    rare = [(i, " ".join(f"t{vocab - 1 - (i * 7 + j) % (vocab // 4)}"
-                         for j in range(4))) for i in range(32)]
-    hot = [(100 + i, " ".join(f"t{(i * 3 + j) % 16}" for j in range(4)))
-           for i in range(4)]
+    rng = np.random.default_rng(0)
+    bands = df_bands(list(ts["term"]), list(ts["df"]))
+    queries = band_queries(rng, bands, MIX)
+    top = sorted(df, key=lambda t: (-df[t], t))[: max(HOT)]
+    queries += [("hot", " ".join(top[:n])) for n in HOT]
 
-    def solo_ms(qid: int, text: str, reps: int = 3) -> float:
+    def solo(qid: int, text: str, reps: int = 3) -> tuple[float, list]:
         q = spark.createDataFrame([(qid, text)], "qid long, question string")
-        best = None
+        best, rows = None, None
         for _ in range(reps):
             t0 = time.perf_counter()
-            wand_search(store, q, k=10, k1=2.5, b=0.2).collect()
+            rows = wand_search(store, q, k=10, k1=2.5, b=0.2).collect()
             dt = (time.perf_counter() - t0) * 1000
             best = dt if best is None else min(best, dt)
-        return round(best, 1)
+        return round(best, 1), [(r["rank"], r["doc_id"], r["score"]) for r in rows]
 
-    # overhead floor: a term no generator can emit — full job machinery,
-    # zero matching blocks
-    overhead_ms = solo_ms(999_999, "zz_not_in_vocab_zz")
+    solo(0, queries[0][1])  # warm the session before anything is timed
+    floor_ms = solo(999_999, "zz_not_in_vocab_zz")[0]
 
-    per_query = {}
-    for qid, text in rare + hot:
-        per_query[str(qid)] = solo_ms(qid, text)
-        print(f"[q] {qid}: {per_query[str(qid)]} ms", file=sys.stderr, flush=True)
+    per_query = []
+    for qid, (band, text) in enumerate(queries):
+        row = {"qid": qid, "band": band,
+               "exposed": sum(df.get(t, 0) for t in set(text.split()))}
+        results = {}
+        # alternate which placement runs first, so neither always runs warm
+        order = list(PLACEMENTS) if qid % 2 == 0 else list(PLACEMENTS)[::-1]
+        for placement in order:
+            blocks.DRIVER_SCORE_MAX_POSTINGS = PLACEMENTS[placement]
+            row[f"{placement}_ms"], results[placement] = solo(qid, text)
+        if results["driver"] != results["shuffled"]:
+            raise AssertionError(f"placements disagree on qid {qid} ({band}: {text})")
+        per_query.append(row)
+        print(f"[q] {row}", file=sys.stderr, flush=True)
 
-    def stats(items):
-        a = np.array(items, dtype=np.float64)
-        return {
-            "n": int(a.size),
-            "p50_ms": round(float(np.percentile(a, 50)), 1),
-            "p99_ms": round(float(np.percentile(a, 99)), 1),
-            "max_ms": round(float(a.max()), 1),
-            "p50_net_ms": round(float(np.percentile(a, 50)) - overhead_ms, 1),
-            "max_net_ms": round(float(a.max()) - overhead_ms, 1),
-        }
+    def summary(rows):
+        out = {"n": len(rows),
+               "exposed_p50": int(np.percentile([r["exposed"] for r in rows], 50)),
+               "exposed_max": max(r["exposed"] for r in rows)}
+        for placement in PLACEMENTS:
+            ms = [r[f"{placement}_ms"] for r in rows]
+            out[f"{placement}_p50_ms"] = round(float(np.percentile(ms, 50)), 1)
+            out[f"{placement}_max_ms"] = max(ms)
+        out["driver_wins"] = sum(r["driver_ms"] < r["shuffled_ms"] for r in rows)
+        return out
 
-    rare_ms = [per_query[str(q)] for q, _ in rare]
-    hot_ms = [per_query[str(q)] for q, _ in hot]
-
-    # batch reference (the number r9 reported)
-    qall = spark.createDataFrame(rare + hot, "qid long, question string")
-    batch_best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        wand_search(store, qall, k=10, k1=2.5, b=0.2).collect()
-        dt = time.perf_counter() - t0
-        batch_best = dt if batch_best is None else min(batch_best, dt)
-
-    # hot-term block exposure, from store metadata only: how many blocks /
-    # postings each hot query is OBLIGED to consider before skipping
-    hot_terms = sorted({t for _, text in hot for t in text.split()})
-    exposure = (
-        store.blocks.filter(F.col("term").isin(hot_terms))
-        .agg(F.count("*").alias("blocks"), F.sum("n_docs").alias("postings"))
-        .collect()[0]
-    )
+    crossover, lo = [], 0
+    for hi in BUCKETS:
+        rows = [r for r in per_query if lo < r["exposed"] and (hi is None or r["exposed"] <= hi)]
+        if rows:
+            crossover.append({"exposed_gt": lo, "exposed_le": hi, **summary(rows)})
+        lo = hi
 
     report = {
-        "n_docs": n_docs, "vocab": vocab, "dl": dl,
-        "n_postings": int(disk_idx.postings.count()),
+        "n_docs": n_docs, "vocab": vocab, "dl": dl, "cores": cores,
+        "n_postings": int(store.blocks.agg(F.sum("n_docs")).collect()[0][0]),
         "segment_size": store.segment_size,
-        "overhead_ms": overhead_ms,
-        "rare": stats(rare_ms),
-        "hot": stats(hot_ms),
-        "hot_over_rare_net": round(
-            (max(hot_ms) - overhead_ms) / max(
-                float(np.percentile(np.array(rare_ms), 50)) - overhead_ms, 0.1), 2),
-        "batch36_sec": round(batch_best, 2),
-        "hot_term_blocks": int(exposure["blocks"]),
-        "hot_term_postings": int(exposure["postings"]),
-        "per_query_ms": per_query,
+        "floor_ms": floor_ms,
+        "bands": {band: summary([r for r in per_query if r["band"] == band])
+                  for band in (*MIX, "hot")},
+        "crossover": crossover,
+        "per_query": per_query,
     }
     print(json.dumps(report))
     spark.stop()
