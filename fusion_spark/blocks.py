@@ -23,8 +23,9 @@ per-term block bounds; if the bound cannot beat the current k-th best score,
 skip decoding the segment entirely. Exact scores for surviving segments are
 computed vectorized (numpy) and fed into a bounded heap per query; the heaps
 are merged on the DRIVER (the reference's chunked-scan + heappushpop shape,
-sentence_transformers.py:334-364). One kernel has two placements. A request
-whose query terms expose at most DRIVER_SCORE_MAX_POSTINGS postings reads
+sentence_transformers.py:334-364). One kernel has two placements. A qid
+chunk whose exposure (its matched terms' postings and blocks, counted once
+per qid that holds the term) is at most DRIVER_SCORE_MAX_POSTINGS reads
 its blocks once as Arrow and runs the kernel on the driver: 3 Spark jobs
 (tokenized queries, pushed-down idf/df read, block read), no shuffle and no
 executor Python. A larger one runs it per partition of a segment-shuffled
@@ -41,7 +42,7 @@ import heapq
 import json
 import os
 from collections import Counter
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -1033,13 +1034,21 @@ def compact_if(
 
 # --------------------------- block-max WAND scoring -------------------------
 
-# A qid chunk whose query terms expose at most this many postings (Σ df) is
-# scored on the driver from one Arrow read of its blocks; above it the chunk
-# takes the segment-shuffled executor pass. The value is the crossover
-# measured with tools/bench_wand_tail.py on a 99.2M-posting store, 4 cores
-# (BENCH.md, "Driver-side WAND scoring"): below it the driver won, above it
-# the two placements split.
+# A qid chunk whose exposure (_exposure: the kernel's work, in postings) is
+# at most this many postings is scored on the driver from one Arrow read of
+# its blocks; above it the chunk takes the segment-shuffled executor pass,
+# which keeps driver memory and driver CPU bounded however large the chunk.
+# The value is where single-query timings with tools/bench_wand_tail.py
+# (99.2M-posting store, 4 cores; BENCH.md, "Driver-side WAND scoring") stop
+# favouring the driver: above it the driver won 13 of 35 pairs, and from
+# 3.6M postings the shuffled pass won 15 of 17.
 DRIVER_SCORE_MAX_POSTINGS = 2_000_000
+# The fixed driver-side cost of scoring one block for one qid, in postings.
+# Measured with the same tool's multi-query requests of rare and mid
+# queries (4 terms of ≈1k postings, 16 blocks each): the driver won 2 of 2
+# pairs at 32 queries, 2 of 4 at 64, and 1 of 14 from 128 up. At 600 a
+# query of that kind weighs ≈42k postings, so the bound falls at ≈47.
+DRIVER_SCORE_BLOCK_POSTINGS = 600
 
 
 def wand_search(
@@ -1060,8 +1069,9 @@ def wand_search(
       1. query terms — the tokenized query frame is collected once, bounded
          by `limit(cap + 1)`; qtf is counted on the driver;
       2. idf — one pushed-down `termstats.filter(term IN …)` collect of
-         (term, df, idf); a chunk's exposure, Σ df over its matched terms,
-         is known here, before any blob is read;
+         (term, df, idf); a chunk's exposure (`_exposure`: its matched
+         terms' postings and blocks, counted once per qid that holds the
+         term) is known here, before any blob is read;
       3. per qid chunk, one of two placements of the same kernel:
          - blocks (1 job) — exposure ≤ DRIVER_SCORE_MAX_POSTINGS: the
            chunk's blocks are read once as Arrow (`blocks.filter(term IN
@@ -1115,7 +1125,8 @@ def wand_search(
                 for term, n in qtf[qid].items():
                     if term in stats:
                         by_term.setdefault(term, []).append((qid, n, stats[term][1]))
-            if sum(stats[t][0] for t in by_term) <= DRIVER_SCORE_MAX_POSTINGS:
+            exposure = _exposure(packed, ((stats[t][0], len(u)) for t, u in by_term.items()))
+            if exposure <= DRIVER_SCORE_MAX_POSTINGS:
                 sc.setJobDescription("wand_search: blocks")
                 # one batch holds every segment's rows, so each (qid, doc_id)
                 # is scored once even when the store's files split on read
@@ -1129,6 +1140,21 @@ def wand_search(
         return _ranked_frame(spark, parts)
     finally:
         sc.setJobDescription(caller_description)
+
+
+def _exposure(packed: PackedIndex, term_uses: Iterable[tuple[int, int]]) -> int:
+    """A qid chunk's scoring work in postings, from (df, uses) per matched
+    term, uses being how many of the chunk's qids hold the term. The kernel
+    scores each of the term's blocks once per such qid: the block's
+    postings, plus DRIVER_SCORE_BLOCK_POSTINGS of fixed work. A term has
+    ≈ min(df, n_segments) blocks (auto_segment_size's model, dense doc ids).
+    Only the postings, each read once, reach driver memory, so the bound on
+    this also bounds the blobs the driver holds."""
+    n_segments = max(-(-packed.n_docs // packed.segment_size), 1)
+    return sum(
+        uses * (df + DRIVER_SCORE_BLOCK_POSTINGS * min(df, n_segments))
+        for df, uses in term_uses
+    )
 
 
 def _query_tf(

@@ -622,16 +622,27 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     the driver (query terms, idf, block read), ≤ 4 when forced through the
     shuffled pass (segment shuffle + score collect in place of the block
     read), a no-match request ≤ 2, and the caller's job description
-    survives."""
+    survives. The bound counts a term once per qid that holds it: at a
+    bound of one query's exposure that query stays on the driver, two
+    queries of the same term take the shuffled pass."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
     store = PackedIndex.read(spark, str(tmp_path / "store"))
-    term = idx.termstats.orderBy("term").first()["term"]
+    first = idx.termstats.orderBy("term").first()
+    term = first["term"]
     sc = spark.sparkContext
     schema = "struct<qid:bigint,doc_id:bigint,score:double,rank:int>"
+    shuffled_chunks = []
+    candidates = blocks._wand_candidates
+    monkeypatch.setattr(
+        blocks, "_wand_candidates",
+        lambda *a: shuffled_chunks.append(a[2]) or candidates(*a),
+    )
 
-    def run(text, group):
-        q = spark.createDataFrame([(1, text)], "qid long, question string")
+    def run(text, group, n_qids=1):
+        q = spark.createDataFrame(
+            [(qid, text) for qid in range(1, n_qids + 1)], "qid long, question string"
+        )
         sc.setJobGroup(group, "caller")
         try:
             out = wand_search(store, q, k=5, k1=2.5, b=0.2)
@@ -643,8 +654,13 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
         assert out.schema.simpleString() == schema
         return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
+    monkeypatch.setattr(
+        blocks, "DRIVER_SCORE_MAX_POSTINGS", blocks._exposure(store, [(first["df"], 1)])
+    )
     rows, jobs = run(f"{term} {term}", "wand-jobs-matched")
-    assert len(rows) > 0 and jobs <= 3
+    assert len(rows) > 0 and jobs <= 3 and shuffled_chunks == []
+    run(f"{term} {term}", "wand-jobs-two-qids", n_qids=2)
+    assert shuffled_chunks == [[1, 2]]
     monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", 0)
     shuffled, jobs = run(f"{term} {term}", "wand-jobs-shuffled")
     assert shuffled == rows and jobs <= 4

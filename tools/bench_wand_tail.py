@@ -3,8 +3,9 @@ kernel forced: the crossover instrument for
 `blocks.DRIVER_SCORE_MAX_POSTINGS`.
 
 `wand_search` scores a qid chunk on the driver, from one Arrow read of its
-blocks, when the chunk's query terms expose at most that many postings
-(Σ df over the matched terms); above it the chunk takes the
+blocks, when the chunk's exposure (`blocks._exposure`: the postings and
+blocks of its matched terms, counted once per query that holds the term)
+is at most that many postings; above it the chunk takes the
 segment-shuffled executor pass. This tool runs every query SOLO (best-of-3
 warm) against one packed store, once with the bound forced to 0 (shuffled)
 and once above every exposure (driver), in alternating order, and checks
@@ -16,6 +17,11 @@ ladder of the 1, 2, 4, 8, 16 and 32 highest-df terms takes the exposure to
 the store's worst case. A no-op query (no term in the store: 2 jobs, no block read)
 gives the fixed floor. The report has per-band latency and exposure for
 each placement, and a crossover table over exposure buckets.
+
+Multi-query requests are timed the same way (best-of-2): rare + mid
+batches of 4 to 1024 queries (1024 is one full qid chunk), then every solo
+query above as one request: the crossover instrument for
+`blocks.DRIVER_SCORE_BLOCK_POSTINGS`.
 
 Reuses a bench_scale1b out_dir when given (postings/docstats/mono already
 on disk); otherwise generates the standing fixture at the requested size.
@@ -35,6 +41,7 @@ import shutil
 import sys
 import tempfile
 import time
+from collections import Counter
 
 import numpy as np
 
@@ -52,6 +59,7 @@ MIX = {"rare": 8, "mid": 8, "head": 8}
 HOT = (1, 2, 4, 8, 16, 32)  # queries of the n highest-df terms
 PLACEMENTS = {"driver": 10**18, "shuffled": 0}  # forced driver bound
 BUCKETS = (10_000, 100_000, 1_000_000, None)  # exposure upper edges
+BATCHES = (4, 16, 64, 256, 1024)  # queries per multi-query request (≤ one chunk)
 
 
 def main():
@@ -101,33 +109,61 @@ def main():
     top = sorted(df, key=lambda t: (-df[t], t))[: max(HOT)]
     queries += [("hot", " ".join(top[:n])) for n in HOT]
 
-    def solo(qid: int, text: str, reps: int = 3) -> tuple[float, list]:
-        q = spark.createDataFrame([(qid, text)], "qid long, question string")
+    def run(batch: list[tuple[int, str]], reps: int) -> tuple[float, list]:
+        """Best-of-reps warm wall (ms) of one request, and its ranking."""
+        q = spark.createDataFrame(batch, "qid long, question string")
         best, rows = None, None
         for _ in range(reps):
             t0 = time.perf_counter()
             rows = wand_search(store, q, k=10, k1=2.5, b=0.2).collect()
             dt = (time.perf_counter() - t0) * 1000
             best = dt if best is None else min(best, dt)
-        return round(best, 1), [(r["rank"], r["doc_id"], r["score"]) for r in rows]
+        return round(best, 1), sorted(
+            (r["qid"], r["rank"], r["doc_id"], r["score"]) for r in rows)
 
-    solo(0, queries[0][1])  # warm the session before anything is timed
-    floor_ms = solo(999_999, "zz_not_in_vocab_zz")[0]
+    def forced(i: int, batch: list[tuple[int, str]], reps: int = 3) -> dict:
+        """One request timed with each placement forced; they must agree."""
+        out, results = {}, {}
+        # alternate which placement runs first, so neither always runs warm
+        order = list(PLACEMENTS) if i % 2 == 0 else list(PLACEMENTS)[::-1]
+        for placement in order:
+            blocks.DRIVER_SCORE_MAX_POSTINGS = PLACEMENTS[placement]
+            out[f"{placement}_ms"], results[placement] = run(batch, reps)
+        if results["driver"] != results["shuffled"]:
+            raise AssertionError(f"placements disagree on {batch[:2]} ...")
+        return out
+
+    def exposure(batch: list[tuple[int, str]]) -> dict:
+        """Postings the request's (query, term) pairs touch, and the
+        exposure wand_search compares with the bound."""
+        uses = Counter(t for _, text in batch for t in set(text.split()) if t in df)
+        exposed = blocks._exposure(store, ((df[t], n) for t, n in uses.items()))
+        return {"postings": sum(df[t] * n for t, n in uses.items()), "exposed": exposed,
+                "bound_picks": "driver" if exposed <= bound else "shuffled"}
+
+    bound = blocks.DRIVER_SCORE_MAX_POSTINGS  # before forced() overrides it
+    run([(0, queries[0][1])], 3)  # warm the session before anything is timed
+    floor_ms = run([(999_999, "zz_not_in_vocab_zz")], 3)[0]
 
     per_query = []
     for qid, (band, text) in enumerate(queries):
-        row = {"qid": qid, "band": band,
-               "exposed": sum(df.get(t, 0) for t in set(text.split()))}
-        results = {}
-        # alternate which placement runs first, so neither always runs warm
-        order = list(PLACEMENTS) if qid % 2 == 0 else list(PLACEMENTS)[::-1]
-        for placement in order:
-            blocks.DRIVER_SCORE_MAX_POSTINGS = PLACEMENTS[placement]
-            row[f"{placement}_ms"], results[placement] = solo(qid, text)
-        if results["driver"] != results["shuffled"]:
-            raise AssertionError(f"placements disagree on qid {qid} ({band}: {text})")
+        batch = [(qid, text)]
+        row = {"qid": qid, "band": band, **exposure(batch), **forced(qid, batch)}
         per_query.append(row)
         print(f"[q] {row}", file=sys.stderr, flush=True)
+
+    # multi-query requests: rare + mid batches up to one full qid chunk,
+    # then every solo query above as one request
+    mixes = [("rare+mid", band_queries(rng, bands, {"rare": n // 2, "mid": n - n // 2}))
+             for n in BATCHES]
+    mixes.append(("solo set", queries))
+    per_batch = []
+    for i, (mix, texts) in enumerate(mixes):
+        batch = [(qid, text) for qid, (_, text) in enumerate(texts)]
+        row = {"mix": mix, "n_queries": len(batch), **exposure(batch),
+               **forced(i, batch, reps=2)}
+        per_batch.append(row)
+        print(f"[batch] {row}", file=sys.stderr, flush=True)
 
     def summary(rows):
         out = {"n": len(rows),
@@ -156,6 +192,7 @@ def main():
                   for band in (*MIX, "hot")},
         "crossover": crossover,
         "per_query": per_query,
+        "batches": per_batch,
     }
     print(json.dumps(report))
     spark.stop()
