@@ -23,17 +23,21 @@ per-term block bounds; if the bound cannot beat the current k-th best score,
 skip decoding the segment entirely. Exact scores for surviving segments are
 computed vectorized (numpy) and fed into a bounded heap per query; the heaps
 are merged on the DRIVER (the reference's chunked-scan + heappushpop shape,
-sentence_transformers.py:334-364). One kernel has two placements. A qid
-chunk whose exposure (its matched terms' postings and blocks, counted once
-per qid that holds the term) is at most DRIVER_SCORE_MAX_POSTINGS reads
-its blocks once as Arrow and runs the kernel on the driver: 3 Spark jobs
-(tokenized queries, pushed-down idf/df read, block read), no shuffle and no
-executor Python. A larger one runs it per partition of a segment-shuffled
-scan: 4 jobs. A request with no query term in the store is 2 jobs; the
-result is a local relation. The driver holds at most
-DRIVER_SCORE_MAX_POSTINGS postings of blobs per qid chunk. Skipping uses
-safe bounds only → rank/score-identical to the exact v1 join scorer
-(verified in tests, on both placements).
+sentence_transformers.py:334-364). idf and df come from the handle's term
+dictionary (`PackedIndex.term_dict`, term → (df, idf)), filled by one
+collect on the handle's first request and looked up in memory after that,
+as the reference looks terms up in its IDF dict (bm25.py:78-87, 145-147).
+One kernel has two placements. A qid chunk whose exposure (its matched
+terms' postings and blocks, counted once per qid that holds the term) is at
+most DRIVER_SCORE_MAX_POSTINGS reads its blocks once as Arrow and runs the
+kernel on the driver: 2 Spark jobs (tokenized queries, block read), no
+shuffle and no executor Python. A larger one runs it per partition of a
+segment-shuffled scan: 3 jobs. A request with no query term in the store is
+1 job; the result is a local relation. The driver holds the term dictionary
+of each handle it has served and at most DRIVER_SCORE_MAX_POSTINGS postings
+of blobs per qid chunk. Skipping uses safe bounds only → rank/score-
+identical to the exact v1 join scorer (verified in tests, on both
+placements).
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ import os
 from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -531,6 +536,20 @@ class PackedIndex:
     avgdl: float
     segment_size: int
     variant: str = "bm25"
+
+    @cached_property
+    def term_dict(self) -> dict[str, tuple[int, float]]:
+        """term → (df, idf): the stored values of `termstats`, from one
+        collect on first use, then held on the driver for the handle's life.
+
+        Filled lazily, so the build paths that return a handle and never
+        query it (`build_packed`, the shard merges of
+        `build_packed_resumable`) pay nothing. A handle is a snapshot of
+        immutable store files, as its `termstats` file listing already is;
+        for a `merge_packed` union the shard aggregate runs once here
+        instead of once per request."""
+        ts = self.termstats.select("term", "df", "idf").toPandas()
+        return dict(zip(ts["term"], zip(ts["df"].tolist(), ts["idf"].tolist())))
 
     @classmethod
     def from_index(
@@ -1065,13 +1084,15 @@ def wand_search(
     bounded heaps. Rank/score identical to scoring.search (sparse mode):
     deterministic sorted-term summation, tie-break (score DESC, doc_id ASC).
 
-    Job plan: 3 Spark jobs per request, 2 when no query term is in the store.
+    Job plan: 2 Spark jobs per request, 1 when no query term is in the store.
       1. query terms — the tokenized query frame is collected once, bounded
          by `limit(cap + 1)`; qtf is counted on the driver;
-      2. idf — one pushed-down `termstats.filter(term IN …)` collect of
-         (term, df, idf); a chunk's exposure (`_exposure`: its matched
-         terms' postings and blocks, counted once per qid that holds the
-         term) is known here, before any blob is read;
+      2. idf and df are looked up in the handle's term dictionary
+         (`PackedIndex.term_dict`) — no job, except on the handle's first
+         request, which fills it with one collect of termstats; a chunk's
+         exposure (`_exposure`: its matched terms' postings and blocks,
+         counted once per qid that holds the term) is known here, before
+         any blob is read;
       3. per qid chunk, one of two placements of the same kernel:
          - blocks (1 job) — exposure ≤ DRIVER_SCORE_MAX_POSTINGS: the
            chunk's blocks are read once as Arrow (`blocks.filter(term IN
@@ -1084,13 +1105,16 @@ def wand_search(
          doc_id ASC) order.
     The result is a local relation, so collecting it launches no job. Each
     step is labelled with a job description (`wand_search: query terms`,
-    `: idf`, `: blocks`, `: score`); the caller's description is restored
-    on return.
+    `: term dictionary`, `: blocks`, `: score`); the caller's description
+    is restored on return.
 
     Memory contract: a chunk keeps a k-slot heap PER QUERY of that chunk
     wherever it is scored — per shuffled partition on the executors (the
     query-term table ships there by closure), or once on the driver. The
-    DRIVER holds the batch's query terms, at most DRIVER_SCORE_MAX_POSTINGS
+    DRIVER holds the term dictionary of every open handle it has queried
+    (one entry per store term: 192 bytes each held, 232 at the fill's peak,
+    measured over 72,783 terms; BENCH.md), the batch's query terms, at
+    most DRIVER_SCORE_MAX_POSTINGS
     postings of blobs per driver-scored chunk, at most partitions·|chunk|·k
     candidate rows per shuffled chunk (cut to |chunk|·k before the next
     chunk runs) and a result of at most |queries|·k rows. To keep that
@@ -1107,15 +1131,8 @@ def wand_search(
     try:
         sc.setJobDescription("wand_search: query terms")
         qtf = _query_tf(queries, mode, max_queries_per_chunk, max_chunks_per_plan)
-        sc.setJobDescription("wand_search: idf")
-        terms = sorted({t for counts in qtf.values() for t in counts})
-        # an empty IN list folds to an empty relation: no job
-        stats = {
-            r["term"]: (r["df"], r["idf"])
-            for r in packed.termstats.filter(F.col("term").isin(terms))
-            .select("term", "df", "idf")
-            .collect()
-        }
+        sc.setJobDescription("wand_search: term dictionary")
+        stats = packed.term_dict
         qids_all = sorted(q for q, counts in qtf.items() if any(t in stats for t in counts))
         parts = []
         for i in range(0, len(qids_all), max_queries_per_chunk):

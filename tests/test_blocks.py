@@ -82,6 +82,30 @@ def _placements(monkeypatch):
         yield name
 
 
+def _termstats_dict(packed):
+    return {r["term"]: (r["df"], r["idf"]) for r in packed.termstats.collect()}
+
+
+def _request(spark, store, text, group, n_qids=1):
+    """One wand_search request, its collect included, under job group
+    `group`: (rows, Spark jobs submitted). The caller's job description
+    must survive the call."""
+    sc = spark.sparkContext
+    q = spark.createDataFrame(
+        [(qid, text) for qid in range(1, n_qids + 1)], "qid long, question string"
+    )
+    sc.setJobGroup(group, "caller")
+    try:
+        out = wand_search(store, q, k=5, k1=2.5, b=0.2)
+        rows = out.collect()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert out.schema.simpleString() == "struct<qid:bigint,doc_id:bigint,score:double,rank:int>"
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("variant,k1,b", [("bm25", 2.5, 0.2), ("bm25", 1.5, 0.75), ("tfidf", 0, 0)])
 def test_wand_identical_to_exact(spark, docs_df, queries_df, variant, k1, b, monkeypatch):
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content", variant=variant)
@@ -101,6 +125,7 @@ def test_packed_roundtrip_persistence(spark, docs_df, tmp_path):
     packed = PackedIndex.from_index(idx, segment_size=16)
     packed.write(str(tmp_path / "packed"))
     loaded = PackedIndex.read(spark, str(tmp_path / "packed"))
+    assert loaded.term_dict == _termstats_dict(loaded)
     assert loaded.n_docs == packed.n_docs
     assert loaded.avgdl == pytest.approx(packed.avgdl)
     assert loaded.blocks.count() == packed.blocks.count()
@@ -135,8 +160,11 @@ def test_merge_packed_equals_monolithic(spark, docs_df, queries_df, tmp_path):
     merged = merge_packed(spark, shards)
     assert merged.n_docs == mono.n_docs
     assert merged.avgdl == pytest.approx(mono.avgdl)
-    ts_m = {r["term"]: (r["df"], r["idf"]) for r in merged.termstats.collect()}
-    ts_o = {r["term"]: (r["df"], r["idf"]) for r in mono.termstats.collect()}
+    ts_m = _termstats_dict(merged)
+    ts_o = _termstats_dict(mono)
+    # the term dictionaries hold the stored values exactly
+    assert merged.term_dict == ts_m
+    assert mono.term_dict == ts_o
     assert set(ts_m) == set(ts_o)
     for t in ts_o:
         assert ts_m[t][0] == ts_o[t][0]
@@ -267,6 +295,8 @@ def test_wand_identical_under_planted_hot_term(spark, queries_df):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     idx = build_index(docs, doc_id_col="doc_id", text_col="text")
     packed = PackedIndex.from_index(idx, segment_size=32)
+    assert packed.term_dict == _termstats_dict(packed)
+    assert packed.term_dict["return"][1] < 0  # df > N/2: BM25 idf is negative
     qs = spark.createDataFrame(
         [(1, "return extra3"), (2, "t17 return"), (3, "return return")],
         "qid long, question string",
@@ -617,55 +647,43 @@ def test_merge_packed_rejects_overlapping_doc_ranges(spark, docs_df, tmp_path):
 
 
 def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
-    """The serving path's fixed cost, pinned structurally: one matched
-    request, its collect included, submits ≤ 3 Spark jobs when scored on
-    the driver (query terms, idf, block read), ≤ 4 when forced through the
-    shuffled pass (segment shuffle + score collect in place of the block
-    read), a no-match request ≤ 2, and the caller's job description
-    survives. The bound counts a term once per qid that holds it: at a
-    bound of one query's exposure that query stays on the driver, two
-    queries of the same term take the shuffled pass."""
+    """The serving path's fixed cost, pinned structurally: a fresh handle's
+    first matched request submits ≤ 3 Spark jobs (query terms, term
+    dictionary fill, block read). From then on the handle reads no
+    termstats: a matched request, its collect included, is ≤ 2 jobs when
+    scored on the driver, ≤ 3 when forced through the shuffled pass
+    (segment shuffle + score collect in place of the block read), a
+    no-match request ≤ 1, and the caller's job description survives. The
+    bound counts a term once per qid that holds it: at a bound of one
+    query's exposure that query stays on the driver, two queries of the
+    same term take the shuffled pass."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
     store = PackedIndex.read(spark, str(tmp_path / "store"))
     first = idx.termstats.orderBy("term").first()
     term = first["term"]
-    sc = spark.sparkContext
-    schema = "struct<qid:bigint,doc_id:bigint,score:double,rank:int>"
     shuffled_chunks = []
     candidates = blocks._wand_candidates
     monkeypatch.setattr(
         blocks, "_wand_candidates",
         lambda *a: shuffled_chunks.append(a[2]) or candidates(*a),
     )
-
-    def run(text, group, n_qids=1):
-        q = spark.createDataFrame(
-            [(qid, text) for qid in range(1, n_qids + 1)], "qid long, question string"
-        )
-        sc.setJobGroup(group, "caller")
-        try:
-            out = wand_search(store, q, k=5, k1=2.5, b=0.2)
-            rows = out.collect()
-            assert sc.getLocalProperty("spark.job.description") == "caller"
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setJobDescription(None)
-        assert out.schema.simpleString() == schema
-        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
-
     monkeypatch.setattr(
         blocks, "DRIVER_SCORE_MAX_POSTINGS", blocks._exposure(store, [(first["df"], 1)])
     )
-    rows, jobs = run(f"{term} {term}", "wand-jobs-matched")
-    assert len(rows) > 0 and jobs <= 3 and shuffled_chunks == []
-    run(f"{term} {term}", "wand-jobs-two-qids", n_qids=2)
+    rows, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-first")
+    assert len(rows) > 0 and jobs <= 3
+    # a served handle submits no termstats job again
+    monkeypatch.setattr(store, "termstats", None)
+    again, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-matched")
+    assert again == rows and jobs <= 2 and shuffled_chunks == []
+    _request(spark, store, f"{term} {term}", "wand-jobs-two-qids", n_qids=2)
     assert shuffled_chunks == [[1, 2]]
     monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", 0)
-    shuffled, jobs = run(f"{term} {term}", "wand-jobs-shuffled")
-    assert shuffled == rows and jobs <= 4
-    rows, jobs = run("zzzznotaterm", "wand-jobs-nomatch")
-    assert rows == [] and jobs <= 2
+    shuffled, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-shuffled")
+    assert shuffled == rows and jobs <= 3
+    rows, jobs = _request(spark, store, "zzzznotaterm", "wand-jobs-nomatch")
+    assert rows == [] and jobs <= 1
 
 
 def test_wand_census_collect_is_bounded(spark, docs_df):
@@ -683,11 +701,15 @@ def test_wand_census_collect_is_bounded(spark, docs_df):
         wand_search(packed, qs, k=2, max_queries_per_chunk=2, max_chunks_per_plan=2)
 
 
-def test_compact_if_thresholds_and_idempotence(spark, docs_df, queries_df, tmp_path):
+def test_compact_if_thresholds_and_idempotence(
+    spark, docs_df, queries_df, tmp_path, monkeypatch
+):
     """r10 #6: compact_if serves the cheap merged union below the file-count
     threshold, triggers the block-level rewrite above it, and on a repeat
     call with an unchanged store serves the existing compaction with zero
-    work — all three decisions query-identical to the monolithic pack."""
+    work — all three decisions query-identical to the monolithic pack, the
+    union on both placements. The union's termstats is a lazy aggregate over
+    the shard stats; it runs once per handle, not once per request."""
     import glob
     import json
     import os
@@ -715,7 +737,15 @@ def test_compact_if_thresholds_and_idempotence(spark, docs_df, queries_df, tmp_p
     p, decision = compact_if(spark, store, threshold_files=n_files)
     assert decision == "union"
     assert not os.path.exists(os.path.join(store, "compacted"))
-    assert topk(p) == want
+    for placement in _placements(monkeypatch):
+        assert topk(p) == want, placement
+    assert p.term_dict == _termstats_dict(p)
+    term = min(p.term_dict)
+    monkeypatch.setattr(p, "termstats", None)
+    for i in range(2):
+        rows, jobs = _request(spark, p, term, f"wand-union-jobs-{i}")
+        assert len(rows) > 0 and jobs <= 2
+    monkeypatch.undo()
 
     # above threshold → compacted store written + signature stamped
     p, decision = compact_if(spark, store, threshold_files=n_files - 1)

@@ -14,9 +14,15 @@ that both placements return the same ranking.
 Queries come from the store's own df bands (rare / mid / head, split as
 perfbench's `wand_serve` splits them), so every query matches; a "hot"
 ladder of the 1, 2, 4, 8, 16 and 32 highest-df terms takes the exposure to
-the store's worst case. A no-op query (no term in the store: 2 jobs, no block read)
+the store's worst case. A no-op query (no term in the store: 1 job, no block read)
 gives the fixed floor. The report has per-band latency and exposure for
 each placement, and a crossover table over exposure buckets.
+
+The store's term dictionary (`PackedIndex.term_dict`) is measured on
+fresh handles after warm-up: its fill time, the driver memory it holds per
+term (Python allocations traced across a fill, and the process RSS growth
+of the first fill), and a fresh handle's first request (which fills it)
+against its second.
 
 Multi-query requests are timed the same way (best-of-2): rare + mid
 batches of 4 to 1024 queries (1024 is one full qid chunk), then every solo
@@ -41,6 +47,7 @@ import shutil
 import sys
 import tempfile
 import time
+import tracemalloc
 from collections import Counter
 
 import numpy as np
@@ -99,12 +106,10 @@ def main():
         PackedIndex.from_index(disk_idx, segment_size="auto",
                                num_partitions="auto").write(f"{out_dir}/mono")
     store = PackedIndex.read(spark, f"{out_dir}/mono")
-    store.termstats.persist()
-    ts = store.termstats.select("term", "df").toPandas()
-    df = {t: int(d) for t, d in zip(ts["term"], ts["df"])}
+    df = {t: d for t, (d, _) in store.term_dict.items()}
 
     rng = np.random.default_rng(0)
-    bands = df_bands(list(ts["term"]), list(ts["df"]))
+    bands = df_bands(list(df), list(df.values()))
     queries = band_queries(rng, bands, MIX)
     top = sorted(df, key=lambda t: (-df[t], t))[: max(HOT)]
     queries += [("hot", " ".join(top[:n])) for n in HOT]
@@ -141,9 +146,46 @@ def main():
         return {"postings": sum(df[t] * n for t, n in uses.items()), "exposed": exposed,
                 "bound_picks": "driver" if exposed <= bound else "shuffled"}
 
+    def rss_bytes() -> int:
+        with open("/proc/self/statm") as f:
+            return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+
+    def dictionary(reps: int = 3) -> dict:
+        """Warm fills of fresh handles' term dictionaries (median ms), the
+        bytes per term a filled dictionary keeps and peaks at (traced
+        Python allocations), the RSS growth of the first fill per term, and
+        a fresh handle's first and second request on a mid-band query."""
+        fills, rss, firsts, seconds = [], [], [], []
+        q = spark.createDataFrame([(0, queries[MIX["rare"]][1])], "qid long, question string")
+        for _ in range(reps):
+            h = PackedIndex.read(spark, f"{out_dir}/mono")
+            before = rss_bytes()
+            t0 = time.perf_counter()
+            n_terms = len(h.term_dict)
+            fills.append((time.perf_counter() - t0) * 1000)
+            rss.append((rss_bytes() - before) / n_terms)
+            h = PackedIndex.read(spark, f"{out_dir}/mono")
+            for walls in (firsts, seconds):
+                t0 = time.perf_counter()
+                wand_search(h, q, k=10, k1=2.5, b=0.2).collect()
+                walls.append((time.perf_counter() - t0) * 1000)
+        h = PackedIndex.read(spark, f"{out_dir}/mono")
+        tracemalloc.start()
+        h.term_dict
+        kept, peak = tracemalloc.get_traced_memory()
+        tracemalloc.stop()
+        return {"terms": n_terms, "fill_ms": round(float(np.median(fills)), 1),
+                "bytes_per_term": round(kept / n_terms, 1),
+                "peak_bytes_per_term": round(peak / n_terms, 1),
+                "rss_bytes_per_term": round(rss[0], 1),
+                "first_request_ms": round(float(np.median(firsts)), 1),
+                "second_request_ms": round(float(np.median(seconds)), 1)}
+
     bound = blocks.DRIVER_SCORE_MAX_POSTINGS  # before forced() overrides it
     run([(0, queries[0][1])], 3)  # warm the session before anything is timed
     floor_ms = run([(999_999, "zz_not_in_vocab_zz")], 3)[0]
+    term_dict = dictionary()
+    print(f"[dictionary] {term_dict}", file=sys.stderr, flush=True)
 
     per_query = []
     for qid, (band, text) in enumerate(queries):
@@ -188,6 +230,7 @@ def main():
         "n_postings": int(store.blocks.agg(F.sum("n_docs")).collect()[0][0]),
         "segment_size": store.segment_size,
         "floor_ms": floor_ms,
+        "term_dict": term_dict,
         "bands": {band: summary([r for r in per_query if r["band"] == band])
                   for band in (*MIX, "hot")},
         "crossover": crossover,
