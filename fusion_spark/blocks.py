@@ -1084,9 +1084,11 @@ def wand_search(
     bounded heaps. Rank/score identical to scoring.search (sparse mode):
     deterministic sorted-term summation, tie-break (score DESC, doc_id ASC).
 
-    Job plan: 2 Spark jobs per request, 1 when no query term is in the store.
-      1. query terms — the tokenized query frame is collected once, bounded
-         by `limit(cap + 1)`; qtf is counted on the driver;
+    Job plan: 2 Spark jobs in 2 stages per driver-scored request, 1 job in
+    1 stage when no query term is in the store.
+      1. query terms (1 stage, no shuffle) — the tokenized query frame is
+         collected once from one `coalesce(1)` task, bounded by
+         `limit(cap + 1)`; qtf is counted on the driver;
       2. idf and df are looked up in the handle's term dictionary
          (`PackedIndex.term_dict`) — no job, except on the handle's first
          request, which fills it with one collect of termstats; a chunk's
@@ -1094,10 +1096,10 @@ def wand_search(
          counted once per qid that holds the term) is known here, before
          any blob is read;
       3. per qid chunk, one of two placements of the same kernel:
-         - blocks (1 job) — exposure ≤ DRIVER_SCORE_MAX_POSTINGS: the
-           chunk's blocks are read once as Arrow (`blocks.filter(term IN
-           …).toPandas()`, no shuffle, no executor Python) and scored on
-           the driver as one batch;
+         - blocks (1 job, 1 stage) — exposure ≤ DRIVER_SCORE_MAX_POSTINGS:
+           the chunk's blocks are read once as Arrow (`blocks.filter(term
+           IN …).toPandas()`, no shuffle, no executor Python) and scored
+           on the driver as one batch;
          - score (2 jobs: segment shuffle + collect) — above it: one
            `repartition("segment").mapInPandas` pass whose per-partition
            heaps come back to the driver.
@@ -1178,7 +1180,10 @@ def _query_tf(
     queries: DataFrame, mode: str, max_queries_per_chunk: int, max_chunks_per_plan: int
 ) -> dict[int, Counter]:
     """qid → Counter(term → qtf) from ONE bounded collect of the tokenized
-    query frame. Tokenizing stays in the JVM (every `mode`); qtf is the
+    query frame, read in one stage: `coalesce(1)` folds the frame's
+    partitions into one task, so the `limit` needs no exchange. Tokenizing
+    runs in that task (in the JVM for `simple` and `code_jvm`, as an Arrow
+    pandas UDF for the `reference*` and `code` modes); qtf is the
     duplicate-token multiplicity of scoring.query_terms, and a qid given on
     several rows pools its tokens as that groupBy does.
 
@@ -1188,7 +1193,7 @@ def _query_tf(
     error instead of an OOM mid-collect (r9 verdict #7)."""
     cap = max_queries_per_chunk * max_chunks_per_plan
     toks = (
-        tokenize(queries.select("qid", "question"), text_col="question", mode=mode)
+        tokenize(queries.select("qid", "question").coalesce(1), text_col="question", mode=mode)
         .select("qid", "tokens")
         .limit(cap + 1)
         .toPandas()

@@ -19,11 +19,28 @@ working directory, the package root is prepended to
 cluster whose executors cannot import fusion_spark at start-up (shipped only
 by ``addPyFile``), pass ``spark.python.daemon.module=pyspark.daemon`` in
 ``extra_conf``.
+
+Under a ``local[...]`` master the Python workers talk to the JVM over Unix
+domain sockets (``spark.python.unix.domain.socket.enabled``). Over Spark's
+default loopback TCP socket every Python task waited ≈40-50 ms for the JVM
+(BENCH.md "Python workers over Unix domain sockets"). The sockets live in a
+private (0700) directory under ``/tmp``, one per driver process, removed
+when that process exits: the Unix-socket path skips the TCP auth secret, so
+the directory's permissions keep other local users out, and ``/tmp`` keeps
+``<dir>/.<uuid4>.sock`` inside the 107-byte ``sun_path`` limit however long
+``TMPDIR`` or ``java.io.tmpdir`` is. Other masters keep Spark's default. For
+stock TCP under a local master pass
+``spark.python.unix.domain.socket.enabled=false`` in ``extra_conf``.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +55,16 @@ def _default_driver_memory() -> str:
     except (AttributeError, ValueError, OSError):
         return "16g"
     return f"{min(16 * 1024, int(total * 0.75) >> 20)}m"
+
+
+@functools.cache
+def _unix_socket_dir() -> str:
+    """This process's private socket directory, made on first use and
+    removed at exit (after the JVM, whose exit hook pyspark registers later
+    and so runs first)."""
+    path = tempfile.mkdtemp(prefix="fs-sock-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -89,6 +116,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "fusion_spark.worker_daemon")
     )
+    if re.fullmatch(r"local(\[.*\])?", master):
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", _unix_socket_dir()
+        )
     # Opt-in event logging (tools/audit_event_log.py consumes these): the
     # executed plan — AQE-coalesced reads, real task counts — only exists in
     # the event log; .explain() shows the pre-runtime plan (docs/PLANS.md).

@@ -88,8 +88,8 @@ def _termstats_dict(packed):
 
 def _request(spark, store, text, group, n_qids=1):
     """One wand_search request, its collect included, under job group
-    `group`: (rows, Spark jobs submitted). The caller's job description
-    must survive the call."""
+    `group`: (rows, Spark jobs submitted, their stages). The caller's job
+    description must survive the call."""
     sc = spark.sparkContext
     q = spark.createDataFrame(
         [(qid, text) for qid in range(1, n_qids + 1)], "qid long, question string"
@@ -103,7 +103,10 @@ def _request(spark, store, text, group, n_qids=1):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
     assert out.schema.simpleString() == "struct<qid:bigint,doc_id:bigint,score:double,rank:int>"
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return rows, len(jobs), len(stages)
 
 
 @pytest.mark.parametrize("variant,k1,b", [("bm25", 2.5, 0.2), ("bm25", 1.5, 0.75), ("tfidf", 0, 0)])
@@ -650,13 +653,14 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     """The serving path's fixed cost, pinned structurally: a fresh handle's
     first matched request submits ≤ 3 Spark jobs (query terms, term
     dictionary fill, block read). From then on the handle reads no
-    termstats: a matched request, its collect included, is ≤ 2 jobs when
-    scored on the driver, ≤ 3 when forced through the shuffled pass
-    (segment shuffle + score collect in place of the block read), a
-    no-match request ≤ 1, and the caller's job description survives. The
-    bound counts a term once per qid that holds it: at a bound of one
-    query's exposure that query stays on the driver, two queries of the
-    same term take the shuffled pass."""
+    termstats: a matched request, its collect included, is 2 jobs in 2
+    stages when scored on the driver (the query terms are read in one
+    stage, with no exchange), ≤ 3 jobs when forced through the shuffled
+    pass (segment shuffle + score collect in place of the block read), a
+    no-match request 1 job in 1 stage, and the caller's job description
+    survives. The bound counts a term once per qid that holds it: at a
+    bound of one query's exposure that query stays on the driver, two
+    queries of the same term take the shuffled pass."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
     store = PackedIndex.read(spark, str(tmp_path / "store"))
@@ -671,19 +675,19 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     monkeypatch.setattr(
         blocks, "DRIVER_SCORE_MAX_POSTINGS", blocks._exposure(store, [(first["df"], 1)])
     )
-    rows, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-first")
+    rows, jobs, _ = _request(spark, store, f"{term} {term}", "wand-jobs-first")
     assert len(rows) > 0 and jobs <= 3
     # a served handle submits no termstats job again
     monkeypatch.setattr(store, "termstats", None)
-    again, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-matched")
-    assert again == rows and jobs <= 2 and shuffled_chunks == []
+    again, jobs, stages = _request(spark, store, f"{term} {term}", "wand-jobs-matched")
+    assert again == rows and (jobs, stages) == (2, 2) and shuffled_chunks == []
     _request(spark, store, f"{term} {term}", "wand-jobs-two-qids", n_qids=2)
     assert shuffled_chunks == [[1, 2]]
     monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", 0)
-    shuffled, jobs = _request(spark, store, f"{term} {term}", "wand-jobs-shuffled")
+    shuffled, jobs, _ = _request(spark, store, f"{term} {term}", "wand-jobs-shuffled")
     assert shuffled == rows and jobs <= 3
-    rows, jobs = _request(spark, store, "zzzznotaterm", "wand-jobs-nomatch")
-    assert rows == [] and jobs <= 1
+    rows, jobs, stages = _request(spark, store, "zzzznotaterm", "wand-jobs-nomatch")
+    assert rows == [] and (jobs, stages) == (1, 1)
 
 
 def test_wand_census_collect_is_bounded(spark, docs_df):
@@ -743,7 +747,7 @@ def test_compact_if_thresholds_and_idempotence(
     term = min(p.term_dict)
     monkeypatch.setattr(p, "termstats", None)
     for i in range(2):
-        rows, jobs = _request(spark, p, term, f"wand-union-jobs-{i}")
+        rows, jobs, _ = _request(spark, p, term, f"wand-union-jobs-{i}")
         assert len(rows) > 0 and jobs <= 2
     monkeypatch.undo()
 

@@ -37,6 +37,12 @@ Usage:
   python tools/bench_wand_tail.py [n_docs] [vocab] [dl] [out_dir] [--keep]
 Defaults: 2_000_000 200_000 50 <tmp> (99.2M postings). --keep leaves the
 store for a later run.
+
+`vocab` is the generator's parameter, not the store's term count: a token
+is `floor(vocab · u³)` with u = `pmod(xxhash64(…), 100000)` / 100000, and
+u takes only 100,000 values, so the default store holds 72,783 distinct
+terms. The generator is kept as it is so that earlier at-size numbers stay
+comparable.
 """
 
 from __future__ import annotations
