@@ -1084,11 +1084,11 @@ def wand_search(
     bounded heaps. Rank/score identical to scoring.search (sparse mode):
     deterministic sorted-term summation, tie-break (score DESC, doc_id ASC).
 
-    Job plan: 2 Spark jobs in 2 stages per driver-scored request, 1 job in
-    1 stage when no query term is in the store.
-      1. query terms (1 stage, no shuffle) — the tokenized query frame is
-         collected once from one `coalesce(1)` task, bounded by
-         `limit(cap + 1)`; qtf is counted on the driver;
+    Job plan: 2 Spark jobs in 3 stages per driver-scored request, 1 job in
+    2 stages when no query term is in the store.
+      1. query terms (2 stages) — the tokenized query frame is collected
+         once, bounded by `limit(cap + 1)`, through a single-partition
+         exchange; qtf is counted on the driver;
       2. idf and df are looked up in the handle's term dictionary
          (`PackedIndex.term_dict`) — no job, except on the handle's first
          request, which fills it with one collect of termstats; a chunk's
@@ -1180,12 +1180,14 @@ def _query_tf(
     queries: DataFrame, mode: str, max_queries_per_chunk: int, max_chunks_per_plan: int
 ) -> dict[int, Counter]:
     """qid → Counter(term → qtf) from ONE bounded collect of the tokenized
-    query frame, read in one stage: `coalesce(1)` folds the frame's
-    partitions into one task, so the `limit` needs no exchange. Tokenizing
-    runs in that task (in the JVM for `simple` and `code_jvm`, as an Arrow
-    pandas UDF for the `reference*` and `code` modes); qtf is the
-    duplicate-token multiplicity of scoring.query_terms, and a qid given on
-    several rows pools its tokens as that groupBy does.
+    query frame. Tokenizing runs in the frame's own tasks (in the JVM for
+    `simple` and `code_jvm`, as an Arrow pandas UDF for the `reference*` and
+    `code` modes), which feed the `limit` through a single-partition
+    exchange. Reading the frame as `coalesce(1)` instead (one stage, no
+    exchange) measured no faster on single-query requests and slower on
+    multi-query ones (BENCH.md "Python workers over Unix domain sockets").
+    qtf is the duplicate-token multiplicity of scoring.query_terms, and a
+    qid given on several rows pools its tokens as that groupBy does.
 
     The collect is the first place a miswired 10^8-row "query" frame would
     land on the driver — limit() caps it at one row past the largest batch
@@ -1193,7 +1195,7 @@ def _query_tf(
     error instead of an OOM mid-collect (r9 verdict #7)."""
     cap = max_queries_per_chunk * max_chunks_per_plan
     toks = (
-        tokenize(queries.select("qid", "question").coalesce(1), text_col="question", mode=mode)
+        tokenize(queries.select("qid", "question"), text_col="question", mode=mode)
         .select("qid", "tokens")
         .limit(cap + 1)
         .toPandas()

@@ -24,13 +24,16 @@ Under a ``local[...]`` master the Python workers talk to the JVM over Unix
 domain sockets (``spark.python.unix.domain.socket.enabled``). Over Spark's
 default loopback TCP socket every Python task waited ≈40-50 ms for the JVM
 (BENCH.md "Python workers over Unix domain sockets"). The sockets live in a
-private (0700) directory under ``/tmp``, one per driver process, removed
-when that process exits: the Unix-socket path skips the TCP auth secret, so
-the directory's permissions keep other local users out, and ``/tmp`` keeps
-``<dir>/.<uuid4>.sock`` inside the 107-byte ``sun_path`` limit however long
-``TMPDIR`` or ``java.io.tmpdir`` is. Other masters keep Spark's default. For
-stock TCP under a local master pass
-``spark.python.unix.domain.socket.enabled=false`` in ``extra_conf``.
+private (0700) directory under ``/tmp``, one per driver process: the
+Unix-socket path skips the TCP auth secret, so the directory's permissions
+keep other local users out, and ``/tmp`` keeps ``<dir>/.<uuid4>.sock``
+inside the 107-byte ``sun_path`` limit however long ``TMPDIR`` or
+``java.io.tmpdir`` is. The directory is removed by an ``atexit`` handler,
+which Python runs only on a normal exit: a driver killed by any signal
+(SIGTERM included, so ``timeout`` and ``kill`` too) leaves it behind. Other
+masters keep Spark's default. For stock TCP under a local
+master pass ``spark.python.unix.domain.socket.enabled=false`` in
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -60,8 +63,9 @@ def _default_driver_memory() -> str:
 @functools.cache
 def _unix_socket_dir() -> str:
     """This process's private socket directory, made on first use and
-    removed at exit (after the JVM, whose exit hook pyspark registers later
-    and so runs first)."""
+    removed at a normal exit (after the JVM, whose exit hook pyspark
+    registers later and so runs first); a driver killed by a signal, SIGTERM
+    included, leaves it behind."""
     path = tempfile.mkdtemp(prefix="fs-sock-", dir="/tmp")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path

@@ -653,14 +653,14 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     """The serving path's fixed cost, pinned structurally: a fresh handle's
     first matched request submits ≤ 3 Spark jobs (query terms, term
     dictionary fill, block read). From then on the handle reads no
-    termstats: a matched request, its collect included, is 2 jobs in 2
-    stages when scored on the driver (the query terms are read in one
-    stage, with no exchange), ≤ 3 jobs when forced through the shuffled
-    pass (segment shuffle + score collect in place of the block read), a
-    no-match request 1 job in 1 stage, and the caller's job description
-    survives. The bound counts a term once per qid that holds it: at a
-    bound of one query's exposure that query stays on the driver, two
-    queries of the same term take the shuffled pass."""
+    termstats: a matched request, its collect included, is 2 jobs in 3
+    stages when scored on the driver (the query terms take 2 stages, the
+    block read 1), ≤ 3 jobs when forced through the shuffled pass (segment
+    shuffle + score collect in place of the block read), a no-match request
+    1 job in 2 stages, and the caller's job description survives. The
+    bound counts a term once per qid that holds it: at a bound of one
+    query's exposure that query stays on the driver, two queries of the
+    same term take the shuffled pass."""
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
     store = PackedIndex.read(spark, str(tmp_path / "store"))
@@ -680,14 +680,14 @@ def test_wand_request_job_count(spark, docs_df, tmp_path, monkeypatch):
     # a served handle submits no termstats job again
     monkeypatch.setattr(store, "termstats", None)
     again, jobs, stages = _request(spark, store, f"{term} {term}", "wand-jobs-matched")
-    assert again == rows and (jobs, stages) == (2, 2) and shuffled_chunks == []
+    assert again == rows and (jobs, stages) == (2, 3) and shuffled_chunks == []
     _request(spark, store, f"{term} {term}", "wand-jobs-two-qids", n_qids=2)
     assert shuffled_chunks == [[1, 2]]
     monkeypatch.setattr(blocks, "DRIVER_SCORE_MAX_POSTINGS", 0)
     shuffled, jobs, _ = _request(spark, store, f"{term} {term}", "wand-jobs-shuffled")
     assert shuffled == rows and jobs <= 3
     rows, jobs, stages = _request(spark, store, "zzzznotaterm", "wand-jobs-nomatch")
-    assert rows == [] and (jobs, stages) == (1, 1)
+    assert rows == [] and (jobs, stages) == (1, 2)
 
 
 def test_wand_census_collect_is_bounded(spark, docs_df):
