@@ -282,9 +282,8 @@ def _blocks_frame(
     segment_size: int,
 ) -> pd.DataFrame:
     """Emit BLOCK_SCHEMA rows from (term,segment,doc_id)-SORTED aligned
-    arrays with group-start indices. Shared by both pack kernels — the
-    lexsort kernel sorts in Python first; the sorted kernel receives rows
-    already ordered by Spark's reduce-side Tungsten sort."""
+    arrays with group-start indices; the pack kernel receives rows already
+    ordered by Spark's reduce-side Tungsten sort."""
     n = doc_ids.shape[0]
     counts = np.diff(np.append(starts, n))
     # doc-id gaps within a block; each block's first delta is relative
@@ -335,7 +334,6 @@ def pack_index(
     index: BM25Index,
     segment_size: int | str = 1 << 20,
     num_partitions: int | str | None = "auto",
-    strategy: str = "sorted",
 ) -> DataFrame:
     """Postings → packed blocks: repartition co-locates every (term, segment)
     group, then ONE vectorized pass per partition builds all of its blocks.
@@ -347,10 +345,10 @@ def pack_index(
     shape degenerates to ~25M four-posting groups and the pack stage becomes
     pure invocation overhead (r7 measurement: no task finished in 15 min;
     BENCH.md "physical layer" section). The partition-level pass does the
-    same work as data-parallel numpy: lexsort once, group boundaries from
-    key changes, per-block stats via ufunc.reduceat, and all three blobs
-    encoded as ONE varint stream per column then sliced per block by byte
-    offset — per-block cost collapses to a bytes-slice. Same shuffle as the
+    same work as data-parallel numpy: group boundaries from key changes,
+    per-block stats via ufunc.reduceat, and all three blobs encoded as ONE
+    varint stream per column then sliced per block by byte offset —
+    per-block cost collapses to a bytes-slice. Same shuffle as the
     groupBy (hash on term+segment), so skew behavior is unchanged: the
     segment key IS the salt for hot terms.
 
@@ -362,46 +360,34 @@ def pack_index(
     `segment_size="auto"` derives the size from the index's own term-df
     distribution via `auto_segment_size` over the real doc-id range (one
     vocab-sized aggregate + one docstats max). `num_partitions` bounds
-    per-task memory (see strategy notes below for what each kernel
-    materializes) — the default "auto" applies `pack_shuffle_partitions`
+    per-task memory — the default "auto" applies `pack_shuffle_partitions`
     (~1.5M postings/task); None keeps the session shuffle-partition
     default (fine to ~10^8 postings at 64 partitions / 4g-core
     executors); an int pins it.
 
-    `strategy` picks the kernel; both produce the IDENTICAL block set
-    (asserted block-for-block in tests and at 99.2M postings in
-    tools/bench_pack_kernel.py):
+    Spark sorts each shuffle partition by (term, segment, doc_id) on the
+    reduce side (Tungsten binary sort, spill-capable, overlapped with the
+    shuffle read), so the Python kernel is a STREAMING pass over Arrow
+    batches: group boundaries from key changes, reduceat stats, varint
+    encode, with the trailing (possibly incomplete) group carried into the
+    next batch. Peak Python memory is O(arrow_batch + largest group), not
+    O(partition), and letting Spark sort beat an np.lexsort over the
+    materialized partition 1.59× at 99.2M postings (BENCH.md r10).
 
-      * "sorted" (default since r10) — Spark sorts each shuffle partition
-        by (term, segment, doc_id) on the reduce side (Tungsten binary
-        sort, spill-capable, overlapped with the shuffle read) and the
-        Python kernel becomes a STREAMING pass over Arrow batches: group
-        boundaries from key changes, reduceat stats, varint encode, with
-        the trailing (possibly incomplete) group carried into the next
-        batch. No np.lexsort, no 5-column gather — the r9 control showed
-        those are memory-bandwidth-bound and scale at ~0.49 on 2→8 local
-        cores (BENCH.md). Peak Python memory is O(arrow_batch + largest
-        group) instead of O(partition).
-      * "lexsort" — the r7–r9 kernel: materialize the whole partition in
-        pandas, factorize terms to int codes, np.lexsort((doc, seg,
-        code)), gather, one emission. Kept as the A/B control and as a
-        fallback if an upstream ever feeds unsorted partitions by design.
-
-    The sorted kernel VERIFIES its ordering contract instead of trusting
-    it: within a group doc-id deltas must be strictly positive (catches
+    The kernel VERIFIES its ordering contract instead of trusting it:
+    within a group doc-id deltas must be strictly positive (catches
     an unsorted feed and duplicate (term, doc) postings alike) and any
     violation raises with the offending term."""
     segment_size, num_partitions = _resolve_pack_params(
         index, segment_size, num_partitions
     )
-    return _pack_postings(index.postings, segment_size, num_partitions, strategy)
+    return _pack_postings(index.postings, segment_size, num_partitions)
 
 
 def _pack_postings(
     postings: DataFrame,
     segment_size: int,
     num_partitions: int | None,
-    strategy: str,
 ) -> DataFrame:
     """(term, doc_id, tf, dl) rows → BLOCK_SCHEMA rows with RESOLVED knobs.
 
@@ -410,51 +396,11 @@ def _pack_postings(
     LAZY (the fused `build_packed` path, where the postings expression
     pipelines straight from tokenize through the aggregation shuffle into
     this repartition without ever being materialized)."""
-    if strategy not in ("sorted", "lexsort"):
-        raise ValueError(f"pack_index: unknown strategy {strategy!r}")
     p = postings.withColumn(
         "segment", F.expr(f"doc_id div {int(segment_size)}")
     )
 
-    def pack_partition_lexsort(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        n = len(pdf)
-        if n == 0:
-            return
-        # factorize → int codes so the partition sort is a pure-numeric
-        # lexsort (string compares would dominate at millions of rows);
-        # codes only need to make equal terms adjacent, not globally ordered
-        codes, _uniq = pd.factorize(pdf["term"], sort=False)
-        segs = pdf["segment"].to_numpy(dtype=np.int64)
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        order = np.lexsort((doc_ids, segs, codes))
-        segs = segs[order]
-        doc_ids = doc_ids[order]
-        if doc_ids.min() < 0:
-            raise ValueError(
-                f"pack_index requires doc_id >= 0 (got {doc_ids.min()})"
-            )
-        codes = codes[order]
-        new_group = np.empty(n, dtype=bool)
-        new_group[0] = True
-        new_group[1:] = (codes[1:] != codes[:-1]) | (segs[1:] != segs[:-1])
-        starts = np.flatnonzero(new_group)
-        yield _blocks_frame(
-            pdf["term"].to_numpy()[order],
-            segs,
-            doc_ids,
-            pdf["tf"].to_numpy(dtype=np.int64)[order],
-            pdf["dl"].to_numpy(dtype=np.int64)[order],
-            starts,
-            segment_size,
-        )
-
-    def pack_partition_sorted(
+    def pack_partition(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -499,7 +445,7 @@ def _pack_postings(
             if bad.any():
                 i = int(np.flatnonzero(bad)[0])
                 raise ValueError(
-                    "pack_index(strategy='sorted'): rows are not strictly "
+                    "pack_index: rows are not strictly "
                     "(term, segment, doc_id)-sorted at term "
                     f"{pdf['term'].iloc[i]!r} doc_id {doc_ids[i]} — "
                     "unsorted feed or duplicate posting."
@@ -522,10 +468,8 @@ def _pack_postings(
         rep = p.repartition(int(num_partitions), "term", "segment")
     else:
         rep = p.repartition("term", "segment")
-    if strategy == "sorted":
-        rep = rep.sortWithinPartitions("term", "segment", "doc_id")
-        return rep.mapInPandas(pack_partition_sorted, schema=BLOCK_SCHEMA)
-    return rep.mapInPandas(pack_partition_lexsort, schema=BLOCK_SCHEMA)
+    rep = rep.sortWithinPartitions("term", "segment", "doc_id")
+    return rep.mapInPandas(pack_partition, schema=BLOCK_SCHEMA)
 
 
 @dataclass
@@ -557,14 +501,12 @@ class PackedIndex:
         index: BM25Index,
         segment_size: int | str = 1 << 20,
         num_partitions: int | str | None = "auto",
-        strategy: str = "sorted",
     ) -> "PackedIndex":
         segment_size, num_partitions = _resolve_pack_params(
             index, segment_size, num_partitions
         )
         return cls(
-            blocks=pack_index(index, segment_size, num_partitions=num_partitions,
-                              strategy=strategy),
+            blocks=pack_index(index, segment_size, num_partitions=num_partitions),
             termstats=index.termstats,
             n_docs=index.n_docs,
             avgdl=index.avgdl,
@@ -744,7 +686,6 @@ def build_packed(
     variant: str = "bm25",
     segment_size: int | str = "auto",
     num_partitions: int | str | None = "auto",
-    strategy: str = "sorted",
     stats_sample_fraction: float = 0.02,
     seed: int = 7,
     timings: dict | None = None,
@@ -766,7 +707,7 @@ def build_packed(
     the same reason: `bm25.py:58-75` streams token counts straight into its
     in-memory index dicts with no intermediate store. Keep the two-phase
     path when you WANT the postings table (it is the resume point of
-    `build_index_resumable` and the input to `write_term_bucketed_store`).
+    `build_index_resumable` and what the exact `scoring.search` joins).
 
     Identity contract (tested): the resulting store is equal to the
     two-phase store over the same corpus — same block set byte-for-byte,
@@ -847,7 +788,7 @@ def build_packed(
 
     blocks = _pack_postings(
         _postings_from_tokens(toks, "doc_id"),
-        segment_size, num_partitions, strategy,
+        segment_size, num_partitions,
     )
     blocks.repartition("segment").write.mode("overwrite").parquet(
         f"{store_dir}/blocks"
@@ -884,7 +825,6 @@ def build_packed_resumable(
     mode: str = "simple",
     variant: str = "bm25",
     segment_size: int | str = "auto",
-    strategy: str = "sorted",
     stats_sample_fraction: float = 0.02,
     seed: int = 7,
 ) -> PackedIndex:
@@ -947,7 +887,7 @@ def build_packed_resumable(
             shard_docs,
             path,
             mode=mode, variant=variant, segment_size=seg,
-            num_partitions="auto", strategy=strategy,
+            num_partitions="auto",
             stats_sample_fraction=stats_sample_fraction, seed=seed,
         )
         return {"doc_lo": lo, "doc_hi": hi, **packed_shard_row(spark, path)}

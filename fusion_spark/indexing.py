@@ -32,7 +32,6 @@ Spark design (scale notes):
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -228,74 +227,3 @@ def load_index(spark: SparkSession, index_dir: str, variant: str = "bm25") -> BM
     docstats = spark.read.parquet(*[os.path.join(index_dir, f"docstats_bucket={b}") for b in buckets])
     return _finalize(postings, docstats, variant)
 
-
-def write_term_bucketed_store(index: BM25Index, path: str, n_buckets: int = 64) -> None:
-    """Query-optimized posting-store layout: partition the postings by
-    `term_bucket = pmod(hash(term), n_buckets)`. A query's terms map to a
-    handful of buckets, so the Hive-style partition column prunes whole
-    FILES before the parquet reader even opens them (directory-level
-    pruning), on top of the term IN (...) row-group filter. This is the
-    co-located layout a 100 TB posting store would use (term cannot be a
-    partition column directly — unbounded cardinality — the hash bucket is
-    the standard fix)."""
-    (
-        index.postings.withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(f"{path}/postings")
-    )
-    index.docstats.write.mode("overwrite").parquet(f"{path}/docstats")
-    index.termstats.write.mode("overwrite").parquet(f"{path}/termstats")
-    with open(f"{path}/meta.json", "w") as f:
-        json.dump(
-            {"n_docs": index.n_docs, "avgdl": index.avgdl, "variant": index.variant,
-             "n_term_buckets": n_buckets},
-            f,
-        )
-
-
-def load_term_bucketed_store(spark: SparkSession, path: str) -> BM25Index:
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
-    postings = spark.read.parquet(f"{path}/postings").drop("term_bucket")
-    # NB: keep the partition column for pruning when filtering manually:
-    # spark.read.parquet(...).filter(term_bucket IN ...) — scoring.score's
-    # prefilter_terms handles the term-level filter; bucket-level pruning is
-    # applied by query_bucket_filter below.
-    return BM25Index(
-        postings=postings,
-        termstats=spark.read.parquet(f"{path}/termstats"),
-        docstats=spark.read.parquet(f"{path}/docstats"),
-        n_docs=meta["n_docs"],
-        avgdl=meta["avgdl"],
-        variant=meta["variant"],
-    )
-
-
-def load_term_bucketed_pruned(
-    spark: SparkSession, path: str, terms: list[str]
-) -> BM25Index:
-    """Load the bucketed store with directory-level pruning for a known
-    query-term set: only the partitions whose bucket hosts a query term are
-    listed/read."""
-    with open(f"{path}/meta.json") as f:
-        meta = json.load(f)
-    n_b = meta["n_term_buckets"]
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    buckets = sorted(
-        r["b"]
-        for r in tdf.select(F.pmod(F.hash("term"), F.lit(n_b)).alias("b")).distinct().collect()
-    )
-    postings = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("term_bucket").isin(buckets))
-        .drop("term_bucket")
-    )
-    return BM25Index(
-        postings=postings,
-        termstats=spark.read.parquet(f"{path}/termstats"),
-        docstats=spark.read.parquet(f"{path}/docstats"),
-        n_docs=meta["n_docs"],
-        avgdl=meta["avgdl"],
-        variant=meta["variant"],
-    )

@@ -83,27 +83,18 @@ def score(
     question_col: str = "question",
     mode: str = "simple",
     zero_tail: bool = False,
-    prefilter_terms: bool = False,
 ) -> DataFrame:
     """All-pairs (qid, doc_id, score) for matched docs (plus the zero tail if
-    requested). No top-k cut — compose with `top_k` below.
-
-    ``prefilter_terms=True`` collects the (small) distinct query-term set to
-    the driver and applies `term IN (...)` to the postings BEFORE the join:
-    a broadcast hash join does not prune the probe-side scan, but an IN
-    filter reaches the parquet reader (dictionary/row-group pruning) — use
-    it when postings are read straight from the on-disk store."""
+    requested). No top-k cut — compose with `top_k` below. Term-pruned
+    reads of an on-disk store are the packed store's job
+    (`blocks.wand_search`: `term IN` pushdown, then block-max skipping)."""
     qterms = query_terms(queries, qid_col, question_col, mode)
     # OOV terms: inner join drops them — identical to the reference's
     # zero contribution (missing idf AND missing postings). The query-term
     # side is tiny → broadcast it into the (potentially huge) termstats too,
     # or Catalyst falls back to a sort-merge join on unknown stats.
     qterms = F.broadcast(qterms).join(index.termstats.select("term", "idf"), "term")
-    postings = index.postings
-    if prefilter_terms:
-        terms = [r["term"] for r in qterms.select("term").distinct().collect()]
-        postings = postings.filter(F.col("term").isin(terms))
-    joined = F.broadcast(qterms).join(postings, "term")
+    joined = F.broadcast(qterms).join(index.postings, "term")
     partial = partial_score_expr(index.variant, k1, b, index.avgdl)
     # Deterministic summation order: fold partials sorted by term, so docs
     # with identical token multisets get byte-identical scores and ties
@@ -154,14 +145,11 @@ def search(
     zero_tail: bool = False,
     qid_col: str = "qid",
     question_col: str = "question",
-    prefilter_terms: bool = False,
 ) -> DataFrame:
     """search_all equivalent (bm25.py:90-106): (qid, doc_id, score, rank),
     rank 1-based, all queries scored in one distributed plan instead of a
     sequential per-query loop."""
-    scored = score(
-        index, queries, k1, b, qid_col, question_col, mode, zero_tail, prefilter_terms
-    )
+    scored = score(index, queries, k1, b, qid_col, question_col, mode, zero_tail)
     return top_k(scored, k, "qid").select("qid", "doc_id", "score", "rank")
 
 

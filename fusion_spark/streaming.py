@@ -1,12 +1,15 @@
-"""Incremental index maintenance via Structured Streaming.
+"""Structured Streaming operators: incremental index ingest, windowed event
+counts, sessionization and exact dedup.
 
-The reference is batch-only (SURVEY.md §2.9) — this is the additive scale
-feature a production posting store needs: new documents arrive as files in a
-landing directory; each micro-batch tokenizes, builds its postings delta,
-and appends it to the posting store (per-batch parquet append via
-foreachBatch). Because tf/dl are per-doc facts, appends never rewrite old
-data; global stats (df/idf/avgdl) are recomputed lazily at query time from
-the posting-store union — identical semantics to a full rebuild.
+The reference is batch-only (SURVEY.md §2.9). Incremental ingest is the
+additive scale feature a production posting store needs: new documents
+arrive as files in a landing directory, and each micro-batch is packed
+straight into its own shard of a packed block store
+(`incremental_packed_stream`), the same format `blocks.build_packed_resumable`
+writes and `blocks.wand_search` serves. Because tf/dl are per-doc facts, a
+wave never rewrites an earlier shard; df/idf/N/avgdl are re-derived exactly
+when the shards are merged, so the store is query-identical to a full
+rebuild.
 
 Every query here runs `trigger(availableNow=True)`: it drains the backlog
 and stops — what tests and backfill jobs need. A live deployment runs the
@@ -18,40 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fusion_spark.indexing import BM25Index, _finalize, _postings_from_tokens
 from fusion_spark.shards import build, shard_set
-from fusion_spark.tokenize import tokenize
-
-
-def incremental_index_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    mode: str = "simple",
-):
-    """Run the incremental posting-store maintenance stream to completion
-    (availableNow). Returns the finished StreamingQuery."""
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        toks = tokenize(batch_df, text_col="text", mode=mode).withColumn(
-            "dl", F.size("tokens")
-        )
-        postings = _postings_from_tokens(toks, "doc_id")
-        postings.write.mode("append").parquet(f"{store_dir}/postings")
-        # docstats kept separately — token-less docs still count toward N/avgdl
-        toks.select("doc_id", "dl").write.mode("append").parquet(f"{store_dir}/docstats")
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def incremental_packed_stream(
@@ -64,9 +34,9 @@ def incremental_packed_stream(
     segment_size: int | str = 4096,
     compact_threshold_files: int = 48,
 ):
-    """Packed-store twin of `incremental_index_stream`, with the
-    compact-on-quiesce hook wired in: each non-empty micro-batch fuses
-    tokenize → aggregate → pack into its own `shard=<batch_id>` sub-store
+    """Incremental packed-store ingest with the compact-on-quiesce hook
+    wired in: each non-empty micro-batch fuses tokenize → aggregate →
+    pack into its own `shard=<batch_id>` sub-store
     (`build_packed`, doc-id-disjoint by the landing contract) and commits
     it to the store's manifest (`fusion_spark.shards`; the plan line pins
     segment_size and mode across waves, and a batch replayed after a crash
@@ -473,12 +443,3 @@ def dedup_stream(
     q.awaitTermination()
     return spark.table(name)
 
-
-def load_incremental_index(
-    spark: SparkSession, store_dir: str, variant: str = "bm25"
-) -> BM25Index:
-    """Posting store → queryable index; df/idf/N/avgdl derived from the
-    current union of appended posting deltas."""
-    postings = spark.read.parquet(f"{store_dir}/postings")
-    docstats = spark.read.parquet(f"{store_dir}/docstats")
-    return _finalize(postings, docstats, variant)

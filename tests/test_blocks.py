@@ -264,26 +264,6 @@ def test_disk_store_wand_correct_even_when_files_split(
     assert got == {"shuffled": b, "driver": b}
 
 
-def test_stream_ingest_pack_wand_lifecycle(spark, docs_df, queries_df, tmp_path):
-    """Full store lifecycle: streamed posting-store appends -> load -> pack
-    -> WAND search must equal a one-shot batch build + exact search."""
-    from fusion_spark.streaming import incremental_index_stream, load_incremental_index
-
-    docs = docs_df.select("doc_id", docs_df["content"].alias("text"))
-    landing, store, ckpt = (str(tmp_path / d) for d in ("landing", "store", "ckpt"))
-    docs.filter("doc_id % 2 = 0").write.mode("append").parquet(landing)
-    incremental_index_stream(spark, landing, store, ckpt)
-    docs.filter("doc_id % 2 = 1").write.mode("append").parquet(landing)
-    incremental_index_stream(spark, landing, store, ckpt)
-
-    inc = load_incremental_index(spark, store)
-    packed = PackedIndex.from_index(inc, segment_size=64)
-    batch = build_index(docs, doc_id_col="doc_id", text_col="text")
-    a = _collect(wand_search(packed, queries_df, k=5, k1=2.5, b=0.2))
-    b = _collect(search(batch, queries_df, k=5, k1=2.5, b=0.2))
-    assert a == b
-
-
 def test_pack_rejects_negative_doc_ids(spark):
     docs = spark.createDataFrame([(-1, "a b c"), (2, "a b")], "doc_id long, text string")
     idx = build_index(docs, doc_id_col="doc_id", text_col="text")
@@ -511,16 +491,28 @@ def test_pack_num_partitions_identical_blocks(spark, docs_df):
     assert pack_shuffle_partitions(10**12, cores=8) == 65_536  # cap
 
 
-def test_pack_sorted_strategy_identical_to_lexsort(spark, docs_df):
-    """The r10 default kernel (Spark reduce-side sort + streaming
-    boundary/reduceat pass) must emit the IDENTICAL block set as the r7-r9
-    lexsort kernel — same groups, same stats, same blob bytes. Run with the
-    Arrow batch size forced tiny so groups span many batches and the
-    carry-over path (tail group held back and prepended to the next batch)
-    is actually exercised, including a group larger than one whole batch."""
+def test_pack_identical_to_reference_encoder(spark, docs_df):
+    """The pack kernel (Spark reduce-side sort + a streaming boundary /
+    reduceat pass) must emit the block set of a plain per-group encoder —
+    same groups, same stats, same blob bytes. Run with the Arrow batch size
+    forced tiny so groups span many batches and the carry-over path (tail
+    group held back and prepended to the next batch) is actually exercised,
+    including a group larger than one whole batch."""
     from fusion_spark.blocks import pack_index
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    postings = idx.postings.toPandas()
+
+    def reference(segment_size):
+        rows = []
+        p = postings.assign(segment=postings["doc_id"] // segment_size)
+        for (term, seg), g in p.groupby(["term", "segment"]):
+            g = g.sort_values("doc_id")
+            doc, tf, dl = (g[c].to_numpy(np.int64) for c in ("doc_id", "tf", "dl"))
+            deltas = np.diff(doc, prepend=seg * segment_size)
+            rows.append((term, int(seg), len(g), int(tf.max()), int(dl.min()),
+                         *(varint_encode(a.astype(np.uint64)) for a in (deltas, tf, dl))))
+        return sorted(rows)
 
     def blobs(df):
         return sorted(
@@ -533,32 +525,19 @@ def test_pack_sorted_strategy_identical_to_lexsort(spark, docs_df):
     old = spark.conf.get(key, None)
     try:
         spark.conf.set(key, "7")  # 64 docs, seg 64 → hot-term groups >> 7 rows
-        tiny = blobs(pack_index(idx, segment_size=64, num_partitions=2,
-                                strategy="sorted"))
+        tiny = blobs(pack_index(idx, segment_size=64, num_partitions=2))
         spark.conf.set(key, "10000")
-        ref = blobs(pack_index(idx, segment_size=64, num_partitions=2,
-                               strategy="lexsort"))
-        big = blobs(pack_index(idx, segment_size=64, num_partitions=2,
-                               strategy="sorted"))
+        big = blobs(pack_index(idx, segment_size=64, num_partitions=2))
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+    ref = reference(64)
     assert tiny == ref
     assert big == ref
     # and a second layout, small segments (many tiny groups)
-    assert blobs(pack_index(idx, segment_size=16, strategy="sorted")) == blobs(
-        pack_index(idx, segment_size=16, strategy="lexsort")
-    )
-
-
-def test_pack_unknown_strategy_raises(spark, docs_df):
-    from fusion_spark.blocks import pack_index
-
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        pack_index(idx, segment_size=16, strategy="bogus")
+    assert blobs(pack_index(idx, segment_size=16)) == reference(16)
 
 
 def test_pack_num_partitions_auto_default(spark, docs_df):

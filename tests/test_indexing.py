@@ -105,38 +105,3 @@ def test_load_index_roundtrip(spark, docs_df, tmp_path):
     loaded = load_index(spark, d)
     assert loaded.n_docs == built.n_docs
     assert loaded.postings.count() == built.postings.count()
-
-
-def test_term_bucketed_store_pruned_search_identical(spark, docs_df, queries_df, tmp_path):
-    """Bucket-partitioned store + directory pruning must return identical
-    search results to the in-memory index, and the pruned plan must read
-    only the buckets hosting query terms."""
-    from fusion_spark.indexing import (
-        load_term_bucketed_pruned,
-        load_term_bucketed_store,
-        write_term_bucketed_store,
-    )
-    from fusion_spark.scoring import query_terms, search
-
-    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
-    path = str(tmp_path / "bucketed")
-    write_term_bucketed_store(idx, path, n_buckets=16)
-
-    full = load_term_bucketed_store(spark, path)
-    terms = [r["term"] for r in query_terms(queries_df).select("term").distinct().collect()]
-    pruned = load_term_bucketed_pruned(spark, path, terms)
-
-    exp = sorted(map(tuple, search(idx, queries_df, k=10, k1=2.5, b=0.2).collect()))
-    got_full = sorted(map(tuple, search(full, queries_df, k=10, k1=2.5, b=0.2).collect()))
-    got_pruned = sorted(map(tuple, search(pruned, queries_df, k=10, k1=2.5, b=0.2).collect()))
-    assert got_full == exp
-    assert got_pruned == exp
-    # pruning reaches the scan as a real partition filter (directory-level)
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.postings.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "term_bucket" in plan, plan

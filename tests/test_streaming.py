@@ -1,5 +1,7 @@
-"""Incremental posting-store stream: arrivals in two waves produce an index
-identical to a one-shot batch build over the union."""
+"""Structured Streaming operators: incremental packed-store ingest in waves
+stays identical to a one-shot batch build over the corpus so far; windowed
+counts, sessionization and dedup match their batch or complete-mode
+counterparts."""
 
 import contextlib
 
@@ -7,34 +9,6 @@ import pytest
 
 from fusion_spark.indexing import build_index
 from fusion_spark.scoring import search
-from fusion_spark.streaming import incremental_index_stream, load_incremental_index
-
-
-def test_incremental_equals_batch(spark, docs_df, queries_df, tmp_path):
-    landing = str(tmp_path / "landing")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    docs = docs_df.select("doc_id", docs_df["content"].alias("text"))
-    wave1 = docs.filter("doc_id % 2 = 0")
-    wave2 = docs.filter("doc_id % 2 = 1")
-
-    wave1.write.mode("append").parquet(landing)
-    incremental_index_stream(spark, landing, store, ckpt)
-    wave2.write.mode("append").parquet(landing)
-    incremental_index_stream(spark, landing, store, ckpt)
-
-    inc = load_incremental_index(spark, store)
-    batch = build_index(docs, doc_id_col="doc_id", text_col="text")
-    assert inc.n_docs == batch.n_docs
-    assert inc.avgdl == pytest.approx(batch.avgdl)
-    assert sorted(map(tuple, inc.postings.collect())) == sorted(
-        map(tuple, batch.postings.collect())
-    )
-
-    a = search(inc, queries_df, k=5, k1=2.5, b=0.2).orderBy("qid", "rank").collect()
-    b = search(batch, queries_df, k=5, k1=2.5, b=0.2).orderBy("qid", "rank").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_incremental_packed_compact_on_quiesce(spark, docs_df, queries_df, tmp_path):
@@ -44,7 +18,7 @@ def test_incremental_packed_compact_on_quiesce(spark, docs_df, queries_df, tmp_p
     store), a later wave invalidates the `_source.json` signature and
     recompacts, and WAND results stay identical to the exact batch scorer
     over the accumulated corpus at every step."""
-    from fusion_spark.blocks import compact_if, wand_search
+    from fusion_spark.blocks import compact_if, pack_index, wand_search
     from fusion_spark.streaming import incremental_packed_stream
 
     landing = str(tmp_path / "landing")
@@ -59,9 +33,21 @@ def test_incremental_packed_compact_on_quiesce(spark, docs_df, queries_df, tmp_p
     # boundaries; interleaved-but-disjoint layouts go through
     # merge_packed(check_disjoint=False) from a caller-owned quiesce instead
     bounds = [32, 48, 64]
+
     def wand_vs_exact(packed, upto_wave):
         seen = docs.filter(f"doc_id < {bounds[upto_wave]}")
         idx = build_index(seen, doc_id_col="doc_id", text_col="text")
+        # the streamed store holds what a batch build of the same docs
+        # holds: N, avgdl (exactly: each shard's n·avgdl is its integer
+        # token total, so the merged mean is the same single division),
+        # df/idf per term, and the block set of packing that build
+        assert packed.n_docs == idx.n_docs
+        assert packed.avgdl == idx.avgdl
+        ts = idx.termstats.toPandas()
+        assert packed.term_dict == dict(
+            zip(ts["term"], zip(ts["df"].tolist(), ts["idf"].tolist())))
+        assert sorted(map(tuple, packed.blocks.collect())) == sorted(
+            map(tuple, pack_index(idx, segment_size=16).collect()))
         exact = search(idx, queries_df, k=10, k1=2.5, b=0.2)
         wand = wand_search(packed, queries_df, k=10, k1=2.5, b=0.2)
         ex = {}

@@ -12,9 +12,10 @@ exercises the WHOLE physical layer at size and proves the merge stage:
   4. shards     — the SAME postings split at segment-aligned doc-id
                   boundaries into 4 disjoint shard stores → merge_packed →
                   WAND identical to the monolithic store
-  5. streamed   — shard 0 re-ingested through incremental_index_stream
-                  (foreachBatch append store), packed, merged with shards
-                  1-3 → WAND identical again
+  5. streamed   — shard 0 re-ingested through incremental_packed_stream
+                  (each micro-batch packed into its own shard at the
+                  same segment size), merged with shards 1-3 → WAND
+                  identical again
 
 Shard boundaries are multiples of the resolved segment size, so the r9
 disjointness guard passes by construction (misaligned shards would share a
@@ -24,7 +25,9 @@ Set SPARK_GRAFT_EVENTLOG_DIR to audit the run (tools/audit_event_log.py —
 the r9 classifier labels any task-skew findings straggler vs hot_key).
 
 Usage: python tools/bench_scale1b.py [n_docs] [vocab] [dl] [out_dir] [--keep]
-Defaults: 14_400_000 200_000 70 <tmp>.  ~45-75 min at local[32]/24g.
+Defaults: 14_400_000 200_000 70 <tmp>.  ~45-75 min at 32 cores / 24g.
+Cores follow the host (`os.cpu_count()`), with 8 shuffle partitions per
+core.
 --keep skips the tmp cleanup so tools/bench_wand_tail.py can reuse the
 docs/postings/mono store (pass the same out_dir).
 """
@@ -61,7 +64,9 @@ def main():
     dl = int(args[2]) if len(args) > 2 else 70
     out_dir = args[3] if len(args) > 3 else tempfile.mkdtemp(prefix="scale1b_")
 
-    spark = get_spark(app_name="bench-scale1b", cores=32, shuffle_partitions=256)
+    cores = os.cpu_count()
+    spark = get_spark(app_name="bench-scale1b", cores=cores,
+                      shuffle_partitions=8 * cores)
     report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl,
                     "driver_memory": spark.conf.get("spark.driver.memory"),
                     "phases": {}}
@@ -98,7 +103,7 @@ def main():
     if not done:
         with phase("gen_write_docs"):
             (
-                spark.range(0, n_docs, numPartitions=256)
+                spark.range(0, n_docs, numPartitions=8 * cores)
                 .withColumn("text", F.expr(f"concat_ws(' ', transform(sequence(1, {dl}), i -> {tok}))"))
                 .select(F.col("id").alias("doc_id"), "text")
                 .write.mode("overwrite").parquet(f"{out_dir}/docs")
@@ -162,9 +167,7 @@ def main():
 
     wand_mono = run("wand_mono", lambda: wand_search(
         disk_mono, queries, k=10, k1=2.5, b=0.2))
-    exact = run("exact_prefilter", lambda: search(
-        disk_idx, queries, k=10, k1=2.5, b=0.2, prefilter_terms=True))
-    exact_full = run("exact_full_scan", lambda: search(
+    exact = run("exact_full_scan", lambda: search(
         disk_idx, queries, k=10, k1=2.5, b=0.2), reps=1)
 
     def identical(a, b, score_tol=0.0):
@@ -179,7 +182,6 @@ def main():
         return True
 
     report["wand_eq_exact"] = identical(wand_mono, exact)
-    report["exact_full_eq_prefilter"] = identical(exact_full, exact)
 
     # ---- 4. four segment-ALIGNED disjoint shards → merge == monolithic
     n_segs = (n_docs + seg - 1) // seg
@@ -209,21 +211,22 @@ def main():
     report["merged_eq_mono"] = identical(wand_merged, wand_mono, score_tol=1e-9)
     report["merged_n_docs_eq"] = merged.n_docs == disk_idx.n_docs
 
-    # ---- 5. streamed shard 0 → pack → merge with batch shards 1-3
-    from fusion_spark.streaming import incremental_index_stream, load_incremental_index
+    # ---- 5. streamed shard 0 → packed shard store, merged with 1-3; the
+    # landing is segment-aligned (bounds are multiples of seg), as the
+    # stream's ingest contract requires
+    from fusion_spark.blocks import _packed_shards
+    from fusion_spark.streaming import incremental_packed_stream
 
+    for d in ("landing", "inc_store", "inc_ckpt"):  # a rerun starts clean
+        shutil.rmtree(f"{out_dir}/{d}", ignore_errors=True)
     with phase("incremental_ingest_shard0"):
-        docs.filter(f"doc_id < {bounds[1]}").write.mode("overwrite").parquet(
-            f"{out_dir}/landing")
-        incremental_index_stream(
+        docs.filter(f"doc_id < {bounds[1]}").write.parquet(f"{out_dir}/landing")
+        incremental_packed_stream(
             spark, f"{out_dir}/landing", f"{out_dir}/inc_store",
-            f"{out_dir}/inc_ckpt")
-    with phase("pack_incremental_shard0"):
-        inc_idx = load_incremental_index(spark, f"{out_dir}/inc_store")
-        PackedIndex.from_index(inc_idx, segment_size=seg,
-                               num_partitions="auto").write(f"{out_dir}/inc0")
+            f"{out_dir}/inc_ckpt", segment_size=seg)
     with phase("merge_with_streamed_shard"):
-        merged_inc = merge_packed(spark, [f"{out_dir}/inc0"] + shard_paths[1:])
+        inc_paths = _packed_shards(f"{out_dir}/inc_store")[0]
+        merged_inc = merge_packed(spark, inc_paths + shard_paths[1:])
         merged_inc.termstats.persist().count()
     wand_inc = run("wand_merged_streamed", lambda: wand_search(
         merged_inc, queries, k=10, k1=2.5, b=0.2))
