@@ -79,9 +79,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` pins ``local[cores]`` — used by the scaling bench to run the
-    identical job at two parallelism levels (local[8] vs local[32], the
-    sandbox stand-in for N vs 4N executors).
+    ``cores`` sets the local master to ``local[cores]``; left as ``None`` it
+    comes from ``SPARK_GRAFT_CPUS``, else ``local[*]`` (every core the JVM
+    sees). ``SPARK_MASTER``, when set, replaces the local master. Shuffle
+    partitions default to ``max(2 * cores, 8)`` for an integer core count,
+    else 32. bench.py's scaling pair passes ``cores`` to run the identical
+    job at two parallelism levels.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -138,9 +141,10 @@ def get_spark(
             .config("spark.eventLog.compress", "false")
         )
     # env-injected conf (JSON dict), applied after everything else: lets a
-    # parent process A/B a scheduler knob (e.g. spark.speculation for the
-    # r10 straggler experiment) in child workers without threading a new
-    # parameter through every tool
+    # parent process A/B a conf in child processes it cannot pass
+    # extra_conf to (e.g. spark.python.unix.domain.socket.enabled=false for
+    # a stock-TCP run of a tool or a perfbench workload) without threading a
+    # new parameter through every tool
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     merged = {**(extra_conf or {})}
     if env_conf:

@@ -1,7 +1,8 @@
 """tools/ units: the event-log audit's parser + rules (r6 verdict #5 — the
 two PLANS.md plan-hygiene lessons as a mechanical check; no SparkSession)
 and bench_curation's deterministic audit-sampling predicate (r7; uses the
-shared session fixture)."""
+shared session fixture), plus a source check that no tool pins its core
+count."""
 
 import importlib.util
 import json
@@ -546,3 +547,39 @@ def test_bench_ann_store_file_stats(tmp_path):
         str(tmp_path / "vectors"), {"3", "9"}, "sig")
     assert (ft, bt, fk, bk) == (4, 750, 3, 550)
     assert by_part == {"3": 150, "7": 200, "9": 400}
+
+
+# --------- every tool takes its cores from the host -----------------------
+
+
+def test_tools_do_not_pin_cores():
+    """No tool runs a fixed `local[N]`: a `get_spark(cores=<int literal>)`
+    call or an argparse `--cores` option would size the session for some
+    other host. get_spark's default (SPARK_GRAFT_CPUS, else local[*])
+    applies; partition math reads `os.sched_getaffinity(0)`."""
+    import ast
+    import glob
+
+    tools_dir = os.path.join(os.path.dirname(__file__), "..", "tools")
+    pinned = []
+    for path in sorted(glob.glob(os.path.join(tools_dir, "*.py"))):
+        name = os.path.basename(path)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            fname = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if fname == "get_spark":
+                pinned += [
+                    f"{name}:{node.lineno} get_spark(cores={kw.value.value!r})"
+                    for kw in node.keywords
+                    if kw.arg == "cores" and isinstance(kw.value, ast.Constant)
+                    and isinstance(kw.value.value, int)
+                ]
+            elif fname == "add_argument" and any(
+                isinstance(a, ast.Constant) and a.value == "--cores" for a in node.args
+            ):
+                pinned.append(f"{name}:{node.lineno} --cores")
+    assert not pinned, pinned

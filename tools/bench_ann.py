@@ -1,7 +1,7 @@
 """At-size proof for the partitioned ANN stores (similarity.write_lsh_store
 / write_ivf_store + their *_topk_store readers): the gate proves them at
-sf0.1 (10k vectors); this runs ~10M vectors and measures the claims that
-matter at 100 TB:
+sf0.1 (10k vectors); this runs 1M vectors by default (BENCH.md's r8 table
+is the 10M run) and measures the claims that matter at 100 TB:
 
   1. PRUNING, OBSERVED: how many parquet files (and bytes) of the store a
      query batch actually touches under PartitionFilters — counted from the
@@ -22,6 +22,7 @@ bytes at any partitioning. Clustered data is the honest shape for IVF (a
 uniform cloud has no inverted-list structure to exploit).
 
 Usage: python tools/bench_ann.py [n_vectors] [dim] [n_clusters] [out_dir]
+Defaults: 1_000_000 64 64 <tmp>.  Output: ONE JSON line.
 """
 
 from __future__ import annotations
@@ -159,12 +160,12 @@ def store_file_stats(vec_dir: str, keep: set[str] | None, part_key: str):
 
 
 def main():
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     n_clusters = int(sys.argv[3]) if len(sys.argv) > 3 else 64
     out_dir = sys.argv[4] if len(sys.argv) > 4 else tempfile.mkdtemp(prefix="annbench_")
 
-    spark = get_spark(app_name="bench-ann", cores=32)
+    spark = get_spark(app_name="bench-ann")
     t0 = time.perf_counter()
     vecs = gen_vectors(spark, n, dim, n_clusters)
     base = f"{out_dir}/base"

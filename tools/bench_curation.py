@@ -134,12 +134,11 @@ def jvm_peak_rss_mb() -> int | None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-docs", type=int, default=1_200_000)
-    ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--shuffle-partitions", default="auto",
                     help="shuffle partitions: an integer, or 'auto' (default) "
                          "to derive from --n-docs via "
                          "pipeline.curation_shuffle_partitions — the r6 sweep "
-                         "encoded (~23k docs/task, pow2, floor cores*2): "
+                         "encoded (~23k docs/task, pow2, floor 2×host cores): "
                          "1.2M→64, 12M→512")
     ap.add_argument("--audit-sample", type=float, default=1.0,
                     help="fraction of post-exact-dedup survivors the "
@@ -171,11 +170,12 @@ def main() -> int:
     )
     from fusion_spark.session import get_spark
 
+    cores = len(os.sched_getaffinity(0))
     if args.shuffle_partitions == "auto":
-        shuffle_partitions = curation_shuffle_partitions(args.n_docs, args.cores)
+        shuffle_partitions = curation_shuffle_partitions(args.n_docs, cores)
     else:
         shuffle_partitions = int(args.shuffle_partitions)
-    spark = get_spark(app_name="curation-bench", cores=args.cores,
+    spark = get_spark(app_name="curation-bench",
                       shuffle_partitions=shuffle_partitions)
     walls, counts = {}, {}
 
@@ -242,7 +242,7 @@ def main() -> int:
 
     walls["total"] = round(sum(walls.values()), 2)
     peak = jvm_peak_rss_mb()
-    print(json.dumps({"walls_sec": walls, **counts, "cores": args.cores,
+    print(json.dumps({"walls_sec": walls, **counts, "cores": cores,
                       "shuffle_partitions": shuffle_partitions,
                       "jvm_peak_rss_mb": peak}))
     spark.stop()

@@ -3,11 +3,11 @@
 The since-removed two-phase sharded pack had a real kill-9 proof at
 99.2M postings (BENCH.md r9). This repeats the experiment on
 `build_packed_resumable` — the fused corpus→store build and the one
-sharded packed producer — at the same scale (tests/test_blocks.py's
-crash-at-every-manifest-write test is the small-scale twin):
+sharded packed producer (tests/test_shards.py's crash-at-every-manifest-
+write test is the small-scale twin):
 
-  1. generate the deterministic 1.44M-doc corpus (same generator as
-     tools/bench_fused_build.py; ~99M distinct postings);
+  1. generate the deterministic corpus (the generator of BENCH.md "r10:
+     fused corpus→store build"; 1.44M docs there, ~99M distinct postings);
   2. CONTROL: run build_packed_resumable(n_shards=4) to completion;
   3. VICTIM: launch the same build in a subprocess, poll the store's
      `_manifest.jsonl` until shard 0 commits, then `kill -9` the
@@ -19,7 +19,8 @@ crash-at-every-manifest-write test is the small-scale twin):
          equal the uninterrupted control's.
 
 Usage: python tools/bench_fused_sigkill.py [n_docs] [vocab] [dl] [n_shards]
-Defaults: 1_440_000 200_000 70 4.  Output: ONE JSON line.
+Defaults: 360_000 200_000 70 4 (a quarter of the r10 corpus).
+Output: ONE JSON line.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ def _gen_docs(n_docs: int, vocab: int, dl: int) -> str:
     from fusion_spark.session import get_spark
 
     docs_dir = tempfile.mkdtemp(prefix="fusedkill_docs_")
-    spark = get_spark(app_name="fusedkill-gen", cores=32, shuffle_partitions=64)
+    spark = get_spark(app_name="fusedkill-gen")
     tok = (
         f"concat('t', cast(floor({vocab} * pow("
         "pmod(xxhash64(concat(cast(id as string), ':', cast(i as string))), 100000)"
@@ -64,8 +65,7 @@ def _worker(docs_dir: str, store_dir: str, n_shards: int) -> None:
     from fusion_spark.blocks import build_packed_resumable
     from fusion_spark.session import get_spark
 
-    spark = get_spark(app_name="fusedkill-worker", cores=32,
-                      shuffle_partitions=256)
+    spark = get_spark(app_name="fusedkill-worker")
     docs = spark.read.parquet(docs_dir)
     build_packed_resumable(spark, docs, store_dir, n_shards=n_shards,
                            segment_size="auto")
@@ -97,7 +97,7 @@ def main() -> None:
         i = sys.argv.index("--worker")
         _worker(sys.argv[i + 1], sys.argv[i + 2], int(sys.argv[i + 3]))
         return
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_440_000
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 360_000
     vocab = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
     dl = int(sys.argv[3]) if len(sys.argv) > 3 else 70
     n_shards = int(sys.argv[4]) if len(sys.argv) > 4 else 4
@@ -162,8 +162,7 @@ def main() -> None:
         # fingerprints: victim store union == control store union
         from fusion_spark.session import get_spark
 
-        spark = get_spark(app_name="fusedkill-compare", cores=8,
-                          shuffle_partitions=16)
+        spark = get_spark(app_name="fusedkill-compare")
         from fusion_spark.blocks import _packed_shards
 
         fa = _fingerprint(spark, _packed_shards(control)[0])

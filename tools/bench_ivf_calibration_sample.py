@@ -64,7 +64,7 @@ def main():
     latent = int(sys.argv[3]) if len(sys.argv) > 3 else 512
     out_dir = tempfile.mkdtemp(prefix="ivfcal_")
 
-    spark = get_spark(app_name="bench-ivf-cal-sample", cores=32)
+    spark = get_spark(app_name="bench-ivf-cal-sample")
     spark.sparkContext.addPyFile(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_ann.py")
     )

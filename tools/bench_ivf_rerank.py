@@ -1,4 +1,5 @@
-"""Quantized IVF scan + exact rerank at the messy 10M fixture (r10 #5).
+"""Quantized IVF scan + exact rerank on the messy fixture (r10 #5; BENCH.md's
+table is the 10M run, the default here is 1M).
 
 The r9 messy table showed recall is CAPTURE-limited: c1024 tops out at
 0.500 recall@10 reading 1.9% of the store per query, and reading more
@@ -24,7 +25,7 @@ no host noise; the quantity a 100× corpus multiplies). The rerank row
 adds the candidate count and the measured wall of the second stage.
 
 Usage: python tools/bench_ivf_rerank.py [n] [dim] [latent] [out_dir]
-Defaults: 10_000_000 64 512 <tmp>.  Output: ONE JSON line.
+Defaults: 1_000_000 64 512 <tmp>.  Output: ONE JSON line.
 """
 
 from __future__ import annotations
@@ -68,12 +69,12 @@ def per_centroid_bytes(path: str) -> dict[int, dict[str, int]]:
 
 
 def main():
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     latent = int(sys.argv[3]) if len(sys.argv) > 3 else 512
     out_dir = sys.argv[4] if len(sys.argv) > 4 else tempfile.mkdtemp(prefix="ivfrr_")
 
-    spark = get_spark(app_name="bench-ivf-rerank", cores=32, extra_conf={
+    spark = get_spark(app_name="bench-ivf-rerank", extra_conf={
         # the rerank stage's exact re-read chunks its In(vec_id) filter at
         # _RERANK_IN_CHUNK=256 ids per scan; threshold 257 pushes each
         # chunk as a precise (shallow) or-chain instead of the default-10

@@ -47,8 +47,7 @@ def main() -> None:
     seg = n_docs // n_shards  # power of two when n_docs/n_shards are
 
     out_dir = tempfile.mkdtemp(prefix="mergefanin_")
-    spark = get_spark(app_name="bench-merge-fanin", cores=32,
-                      shuffle_partitions=64)
+    spark = get_spark(app_name="bench-merge-fanin")
     report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl,
                     "n_shards": n_shards, "segment_size": seg}
 

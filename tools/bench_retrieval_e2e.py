@@ -1,7 +1,8 @@
 """Composed at-size RETRIEVAL run (r9 verdict #8 — the retrieval analogue
 of the standing composed 12M curation artifact).
 
-Every retrieval-side knob in ONE session over a 14.4M-doc corpus:
+Every retrieval-side knob in ONE session over one generated corpus (1.44M
+docs by default; BENCH.md's r9 at-size run passed 14_400_000):
 
   build (tokenize → postings/docstats)
     → pack(segment_size="auto", num_partitions="auto")   [both r9 defaults]
@@ -17,11 +18,11 @@ tools/audit_event_log.py over it — the done-criterion is 0 findings or
 findings triaged by the r9 straggler/hot_key classifier.
 
 Usage: python tools/bench_retrieval_e2e.py [n_docs] [vocab] [dl] [out_dir]
-Defaults: 14_400_000 200_000 70 <tmp>.
+Defaults: 1_440_000 200_000 70 <tmp>.
 
 STANDING MODE (r10 verdict #2): `--standing` runs the same composed path
-at a tenth of the at-size corpus (1.44M docs, ~10 min) as a per-round
-regression artifact with the expectations PINNED IN-PROCESS:
+as a per-round regression artifact with the expectations PINNED
+IN-PROCESS:
 
   * identity gate — the WAND top-k (qid, rank, doc_id, score) lists are
     compared against the exact v1 join scorer on the same queries; any
@@ -69,8 +70,7 @@ def main():
             max_total = float(next(it))
             continue
         args.append(a)
-    default_docs = 1_440_000 if standing else 14_400_000
-    n_docs = int(args[0]) if len(args) > 0 else default_docs
+    n_docs = int(args[0]) if len(args) > 0 else 1_440_000
     vocab = int(args[1]) if len(args) > 1 else 200_000
     dl = int(args[2]) if len(args) > 2 else 70
     out_dir = args[3] if len(args) > 3 else tempfile.mkdtemp(prefix="rete2e_")
@@ -81,7 +81,7 @@ def main():
         elog_dir = tempfile.mkdtemp(prefix="rete2e_elog_")
         os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = elog_dir
 
-    spark = get_spark(app_name="bench-retrieval-e2e", cores=32,
+    spark = get_spark(app_name="bench-retrieval-e2e",
                       shuffle_partitions=256 if not standing else 64)
     T: dict[str, float] = {}
 

@@ -25,9 +25,9 @@ Set SPARK_GRAFT_EVENTLOG_DIR to audit the run (tools/audit_event_log.py —
 the r9 classifier labels any task-skew findings straggler vs hot_key).
 
 Usage: python tools/bench_scale1b.py [n_docs] [vocab] [dl] [out_dir] [--keep]
-Defaults: 14_400_000 200_000 70 <tmp>.  ~45-75 min at 32 cores / 24g.
-Cores follow the host (`os.cpu_count()`), with 8 shuffle partitions per
-core.
+Defaults: 1_440_000 200_000 70 <tmp>, a tenth of the ~1B-posting runs in
+BENCH.md (those passed 14_400_000 and took 45-75 min at 32 cores / 24g).
+Cores follow the host's affinity mask, with 8 shuffle partitions per core.
 --keep skips the tmp cleanup so tools/bench_wand_tail.py can reuse the
 docs/postings/mono store (pass the same out_dir).
 """
@@ -59,14 +59,13 @@ def du(path: str) -> int:
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     keep = "--keep" in sys.argv  # leave the store for tools/bench_wand_tail.py
-    n_docs = int(args[0]) if len(args) > 0 else 14_400_000
+    n_docs = int(args[0]) if len(args) > 0 else 1_440_000
     vocab = int(args[1]) if len(args) > 1 else 200_000
     dl = int(args[2]) if len(args) > 2 else 70
     out_dir = args[3] if len(args) > 3 else tempfile.mkdtemp(prefix="scale1b_")
 
-    cores = os.cpu_count()
-    spark = get_spark(app_name="bench-scale1b", cores=cores,
-                      shuffle_partitions=8 * cores)
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-scale1b", shuffle_partitions=8 * cores)
     report: dict = {"n_docs": n_docs, "vocab": vocab, "dl": dl,
                     "driver_memory": spark.conf.get("spark.driver.memory"),
                     "phases": {}}

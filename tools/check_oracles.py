@@ -54,7 +54,7 @@ def main():
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -37,7 +37,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _pipeline_vocab(corpus: str, text_col: str) -> list[str]:
@@ -46,7 +49,7 @@ def _pipeline_vocab(corpus: str, text_col: str) -> list[str]:
     from fusion_spark.session import get_spark
     from fusion_spark.tokenize import DEFAULT_STOPWORDS, _DIGIT_RE, _PUNCT_RE
 
-    spark = get_spark(app_name="make-lemma-table", cores=8)
+    spark = get_spark(app_name="make-lemma-table")
     rows = (
         spark.read.parquet(corpus)
         .selectExpr(f"explode(split({text_col}, '\\\\s+')) AS tok")
